@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** 3-decimal fixed format for totals/preamble scalars. */
   private[graft] def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
@@ -200,16 +199,8 @@ object Bench {
         .trim.split("\\s+")(1).toDouble
       catch { case _: Throwable => Double.PositiveInfinity }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
+    val cpus = spark.sparkContext.defaultParallelism
     // warm up the JVM/codegen/shuffle paths once so the first measured
     // query doesn't absorb session startup (~4s on a cold JVM); its
     // duration goes into the JSON preamble — a slow warmup flags a

@@ -2,39 +2,41 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's scale-oriented defaults.
+/** The one session factory: every main, tool and spec builds its
+  * session here, so results never depend on which entry point built it.
   *
-  * Tuned for the driver's local[32] harness but chosen to hold on a real
-  * cluster: AQE on (runtime coalescing + skew-join splitting), modest
-  * shuffle parallelism sized to cores (at 100 TB you'd raise
-  * `shuffle.partitions`, not rewrite queries), broadcast threshold left
-  * at default so dimension joins auto-broadcast.
+  * It sets only what differs from Spark's defaults:
+  *   - `local[cpus]` with `spark.sql.shuffle.partitions = cpus`;
+  *   - UTC session time zone (dates and timestamps match the oracle);
+  *   - `legacy.parquet.nanosAsLong` (the testdata's nanosecond events
+  *     column reads as Long; [[Tables.events]] normalizes it);
+  *   - `ansi.enabled=false` (Spark 4's ANSI default has not been run
+  *     against the spec suite);
+  *   - the UI off;
+  *   - `spark.sql.extensions` = [[GraftExtensions]], so the native SQL
+  *     functions resolve without a [[GraftFunctions.register]] call.
+  *
+  * AQE, its partition coalescing and skew-join split, the runtime bloom
+  * filter and the 128 MiB file split are Spark 4 defaults and are not
+  * restated (GraftSessionSpec pins them).
+  *
+  * `cpus` defaults to `$SPARK_GRAFT_CPUS`, else the JVM's available
+  * processors. Static settings apply only to the first session of a
+  * JVM: a second call returns that session.
   */
 object GraftSession {
-  def create(
-      appName: String = "graft",
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-  ): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .appName(appName)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+  private def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def create(cpus: Int = defaultCpus): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.ansi.enabled", "false")
-      // runtime bloom-filter pushdown for selective join sides — free
-      // row-group skipping on the 100 TB probe side
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      // explicit split sizing: 128 MiB keeps one task's working set in
-      // executor memory at any SF (raise shuffle.partitions, not this,
-      // when scaling out)
-      .config("spark.sql.files.maxPartitionBytes", "134217728")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,15 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Scale a driver testdata dir by an integer multiplier — the
-  * sf1-equivalent generator behind the r17 full-battery scaling soak
-  * (VERDICT r16 ask #5): 10 × sf0.1 ≈ sf1 for every table, with the
-  * FK graph kept exactly valid and the dedup topology kept HONEST.
+/** Scale a testdata dir by an integer multiplier — the sf1-equivalent
+  * generator behind `make soak` (10 × sf0.1 ≈ sf1 for every table),
+  * with the FK graph kept exactly valid and the dedup topology kept
+  * HONEST.
   *
-  * Replication rules (the [[Soak]] corpus lessons, applied to the
-  * whole star schema):
+  * Replication rules (applied to the whole star schema):
   *   - fact/entity keys (`*_custkey/orderkey/partkey/suppkey`,
   *     `doc_id`, `vec_id`, `event_id`, `user_id`) shift by
   *     copy × 10⁸ — each copy is a disjoint, internally-consistent
@@ -71,14 +70,7 @@ object ScaleTestdata {
     val Array(src, out, multS) = args
     val mult = multS.toInt
     require(mult >= 1, "mult must be ≥ 1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     try {
       for (t <- verbatim ++ shiftCols.keys.toSeq.sorted) {
         val df = spark.read.parquet(s"$src/$t.parquet")

@@ -158,11 +158,13 @@ final class Engine(spark: SparkSession, wh: Warehouse,
 
   /** POST /upload analog (NetCDF → rain_points). The grid arrives
     * pre-flattened (Schemas.rainGrid); `cellMap` is the J3 spatial
-    * assignment (see [[graft.spatial.CellDistrictMap]]). Returns the
-    * number of appended rows. */
+    * assignment (see [[graft.spatial.CellDistrictMap]]); `sizeBytes`
+    * is the uploaded file's length, recorded in the upload metadata.
+    * Returns the number of appended rows. */
   def ingestRainGrid(grid: DataFrame, cellMap: DataFrame, filename: String,
-      ownerId: Int = 0, northProvsEn: Seq[String] = RainIngest.NorthProvsEn): Long = {
-    val uploadId = recordUpload(UploadRainT, filename, 0L, ownerId)
+      ownerId: Int = 0, northProvsEn: Seq[String] = RainIngest.NorthProvsEn,
+      sizeBytes: Long = 0L): Long = {
+    val uploadId = recordUpload(UploadRainT, filename, sizeBytes, ownerId)
     val rows = RainIngest.ingest(spark, grid, cellMap, provinces, districts, uploadId, northProvsEn)
     val existing = wh.readOrEmpty(RainT, Schemas.rainPoints)
     val out = withPk(rows, "pk_id", nextId(existing, "pk_id"))
@@ -184,7 +186,8 @@ final class Engine(spark: SparkSession, wh: Warehouse,
   def ingestRainNc(ncPath: String, cellMap: DataFrame, ownerId: Int = 0,
       northProvsEn: Seq[String] = RainIngest.NorthProvsEn): Long = {
     val grid = spark.read.format("netcdf").load(ncPath)
-    ingestRainGrid(grid, cellMap, new java.io.File(ncPath).getName, ownerId, northProvsEn)
+    val file = new java.io.File(ncPath)
+    ingestRainGrid(grid, cellMap, file.getName, ownerId, northProvsEn, file.length())
   }
 
   /** POST /upload_dbf analog (risk map → risk_points). */

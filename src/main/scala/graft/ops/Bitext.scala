@@ -127,12 +127,19 @@ object Bitext {
     *     24 k per side fits + probes run 8× faster than the LSH tier,
     *     at the r16 30 k point 5.5×).
     *
-    * There is deliberately NO LSH leg here: the r17 sweep found no
-    * corpus size where [[annCandidates]] beat IVF (its measured table
-    * lives on that method), so a routed LSH window would be dead code
-    * on every default path. [[annCandidates]] remains available as an
-    * explicitly caller-chosen tier — compose it with [[mine]] if a
-    * sweep on YOUR rig says otherwise.
+    * There is deliberately NO LSH tier: the r17 sweep (64-dim, 8 cpus,
+    * k = 8, auto bucket sizing vs IVF √n cells / nprobe 4, comparable
+    * mined-pair recall) found no corpus size where the two-way
+    * [[Similarity.lshTopK]] union beat IVF —
+    *
+    *   per side:   1 k    2 k    4 k    6 k    16 k   24 k   30 k(r16)
+    *   LSH  (s):   8.6   14.4   21.8   24.8   177    265    579
+    *   IVF  (s):   3.7    4.4    6.1    8.6    28.3   33.3   106
+    *
+    * LSH's candidate volume is Σ|bucket|² (bucket-population
+    * quadratic) while IVF's is n · nprobe · cellSize (linear at fixed
+    * quantizer granularity), and the two √n-ish IVF fits amortize by
+    * ~2 k rows.
     *
     * Exactness: the brute route is exact; IVF pays its usual recall
     * trade at production settings, and reproduces the brute mining
@@ -161,63 +168,23 @@ object Bitext {
     mine(pairs, k, threshold)
   }
 
-  /** LSH candidate tier — CALLER-CHOSEN ONLY, never routed: each
-    * side's LSH top-k against the other, UNIONED — both directions,
-    * because the margin needs both sides' own neighbourhood lists and
-    * mutual-best needs every pair visible from whichever side ranked
-    * it. With covering buckets (`nBits = 0`) and `k ≥ |corpus|` this
-    * provably reproduces [[bruteCandidates]]-fed mining bit-for-bit
-    * (BitextSpec pins it — the HybridRetrievalSpec device); production
-    * reduces bits/k and pays the usual LSH recall trade.
-    *
-    * [[bitextMine]] does not route here, by measurement: the r17 sweep
-    * (64-dim, 8 cpus, k = 8, auto bucket sizing vs IVF √n cells /
-    * nprobe 4, comparable mined-pair recall) found NO corpus size
-    * where this tier beat [[ivfCandidates]] —
-    *
-    *   per side:   1 k    2 k    4 k    6 k    16 k   24 k   30 k(r16)
-    *   LSH  (s):   8.6   14.4   21.8   24.8   177    265    579
-    *   IVF  (s):   3.7    4.4    6.1    8.6    28.3   33.3   106
-    *
-    * LSH's candidate volume is Σ|bucket|² (bucket-population
-    * quadratic) while IVF's is n · nprobe · cellSize (linear at fixed
-    * quantizer granularity), and the two √n-ish IVF fits amortize by
-    * ~2 k rows. The tier could only win where quantizer fits are
-    * disproportionately expensive on a given rig (e.g. iteration-bound
-    * k-means on very high dims) — measure with the
-    * SPARK_GRAFT_SOAK_BITEXT_X harness before choosing it, then
-    * compose directly with [[mine]]. [[ivfCandidates]] is the
-    * cell-partitioned variant ([[Ivf.topK]] both ways) — [[mine]]
-    * only sees (sid, tid, cosine).
+  /** The CELL-PARTITIONED candidate tier: each side's IVF top-k
+    * against the other, UNIONED — both directions, because the margin
+    * needs both sides' own neighbourhood lists and mutual-best needs
+    * every pair visible from whichever side ranked it. Each side
+    * probes the OTHER side's quantizer (a query mines targets from the
+    * target index and vice versa); at production scale pass models
+    * loaded from the
+    * two sides' persisted indexes ([[Ivf.loadModel]]) and the probes
+    * ride their cell partitions. With `nprobe = model.nlist` and
+    * `k ≥ |corpus|` this provably reproduces [[bruteCandidates]]-fed
+    * mining bit-for-bit (BitextSpec pins it); production reduces
+    * nprobe/k and pays the usual IVF recall trade.
     *
     * CONTRACT: the two corpora's id spaces must be DISJOINT (re-key
     * one side if needed) — the underlying within-corpus ANN excludes
     * `id == qid` as a self-match, which here would silently drop the
     * cross-corpus pair that happens to share a number. */
-  def annCandidates(src: DataFrame, tgt: DataFrame, k: Int,
-      nBits: Int = -1, nTables: Int = 8): DataFrame = {
-    val st = Similarity.lshTopK(
-        tgt, src.select(col("id").as("qid"), col("embedding")), k, nBits, nTables)
-      .select(col("qid").as("sid"), col("id").as("tid"), col("cosine"))
-    val ts = Similarity.lshTopK(
-        src, tgt.select(col("id").as("qid"), col("embedding")), k, nBits, nTables)
-      .select(col("id").as("sid"), col("qid").as("tid"), col("cosine"))
-    st.unionByName(ts).distinct()
-  }
-
-  /** The CELL-PARTITIONED candidate tier: each side's IVF top-k
-    * against the other, unioned — [[annCandidates]] with [[Ivf.topK]]
-    * swapped in as the retrieval arm. Each side probes the OTHER
-    * side's quantizer (a query mines targets from the target index
-    * and vice versa); at production scale pass models loaded from the
-    * two sides' persisted indexes ([[Ivf.loadModel]]) and the probes
-    * ride their cell partitions. With `nprobe = model.nlist` and
-    * `k ≥ |corpus|` this provably reproduces [[bruteCandidates]]-fed
-    * mining bit-for-bit (BitextSpec pins it — the covering-LSH
-    * device); production reduces nprobe/k and pays the usual IVF
-    * recall trade. Same contract as [[annCandidates]]: DISJOINT id
-    * spaces (the within-corpus ANN drops `id == qid` as a
-    * self-match). */
   def ivfCandidates(src: DataFrame, tgt: DataFrame, k: Int,
       srcModel: Ivf.Model, tgtModel: Ivf.Model, nprobe: Int = 4): DataFrame = {
     val st = Ivf.topK(tgt,

@@ -312,13 +312,11 @@ object Dedup {
     * corpus size via [[autoBands]]. The count that decides is a full
     * pass over `df` — cheap for a parquet scan (footer counts), but a
     * re-execution of the whole upstream plan when `df` is a computed
-    * pipeline: pass `knownCount` if the caller already has it (as Soak
-    * does) or count a materialized frame. Gate queries pin explicit
-    * configs so their oracles stay deterministic. */
+    * pipeline: materialize such a frame first. Gate queries pin
+    * explicit configs so their oracles stay deterministic. */
   def minhashNearDupsAuto(df: DataFrame, threshold: Double, n: Int = 3,
-      minRecall: Double = 0.95, knownCount: Long = -1L): DataFrame = {
-    val (k, bands) = autoBands(
-      if (knownCount >= 0) knownCount else df.count(), threshold, minRecall)
+      minRecall: Double = 0.95): DataFrame = {
+    val (k, bands) = autoBands(df.count(), threshold, minRecall)
     minhashNearDups(df, threshold, n, k, bands)
   }
 

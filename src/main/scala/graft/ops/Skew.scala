@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Skew mitigation for hot keys (the builder-prompt scale checklist:
   * "skewed keys → salting or AQE skew-join").
   *
-  * AQE's skew-join split (enabled in [[graft.GraftSession]]) covers
+  * AQE's skew-join split (on by default in Spark 4) covers
   * sort-merge joins at runtime; these helpers cover the two cases AQE
   * does not: a skewed AGGREGATION (one reducer owns the hot key) and a
   * skewed broadcast-side join fan-out. Both are pure plan rewrites —

@@ -78,7 +78,7 @@ object CurationQueries {
     * they all SHARE a parity and a %2 promo would be constant (hence
     * 100 % frequent, always stripped) within every source, never
     * exercising the mid-frequency keep path (the same even-modulus
-    * trap caught in Soak's pseudo-site keying). With %40 the promo
+    * trap once caught in a scale soak's pseudo-site keying). With %40 the promo
     * alternates doc-to-doc within each source: ~50 % < 0.6 → kept.
     * Left unpersisted DELIBERATELY although stripLines scans it 4× —
     * a persisted gate frame would be cache-hit by Bench's later reps

@@ -280,8 +280,8 @@ object EventStreams {
     * are an indirect fragmentation proxy — one append spreads across
     * up to nBuckets files, so a fixed n mis-compacts by the
     * touched-bucket factor, which varies with batch content. The r17
-    * audit (SPARK_GRAFT_SOAK_STREAMFRAG, 40 × 100-doc batches,
-    * 64 buckets): uncompacted debt grows 24.7 files/batch to 988
+    * audit (40 × 100-doc batches, 64 buckets): uncompacted debt
+    * grows 24.7 files/batch to 988
     * files; `compactEvery = 10` ends at 36 files with 4 compactions;
     * `compactOverFiles = 128` ends at 60 having compacted every ~5
     * batches — the file knob BOUNDS what reads pay (files opened)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Job-count/gap profiler for the multi-job lifecycle gates:
@@ -14,16 +13,7 @@ object JobProfile {
     val name = args.headOption.getOrElse(sys.error("usage: JobProfile <name> [reps]"))
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val jobNanos = new java.util.concurrent.atomic.AtomicLong(0L)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query timer for before/after plan work:
   * runMain graft.tools.OneQuery <queryName> [reps] — times
   * `SparkEntry.queries(name)` on SPARK_GRAFT_SF_DIR like Bench does
@@ -13,16 +11,7 @@ object OneQuery {
     val name = args.headOption.getOrElse(sys.error("usage: OneQuery <name> [reps]"))
     val reps = args.lift(1).map(_.toInt).getOrElse(5)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create()
     try graft.SparkEntry.queries("q1_agg")(spark, sfDir).count()
     catch { case _: Throwable => }
     val fn = graft.SparkEntry.queries(name)

@@ -3,19 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs (small parallelism for test speed). */
+/** Shared local session for specs: the factory's session at
+  * parallelism 4. Its SQL warehouse (BucketingSpec's `saveAsTable`) goes
+  * to a temporary directory, passed as a `spark.*` system property,
+  * which the session's SparkConf reads at creation. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.warehouse.dir",
+  lazy val spark: SparkSession = {
+    System.setProperty("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-sql-wh").toString)
-    .getOrCreate()
+    GraftSession.create(cpus = 4)
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {

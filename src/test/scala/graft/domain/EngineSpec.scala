@@ -134,6 +134,9 @@ class EngineSpec extends SparkSpec {
     val n = eng.ingestRainNc(nc.toString, cellMap)
     assert(n == 2) // one district-day row per time record
     assert(eng.listRain().total == 2)
+    // the upload metadata carries the .nc file's length
+    assert(eng.listUploads(Engine.UploadRainT).select("size_bytes").collect()
+      .map(_.getLong(0)).toSeq == Seq(Files.size(nc)))
 
     // the ingest's Thailand bbox composes with the DSv2: filters are
     // pushed to the netcdf scan, not evaluated post-hoc
@@ -158,6 +161,23 @@ class EngineSpec extends SparkSpec {
       .where($"latitude".between(RainIngest.LatMin, RainIngest.LatMax) &&
         $"longitude".between(RainIngest.LonMin, RainIngest.LonMax))
     assert(far.rdd.getNumPartitions == 0)
+  }
+
+  test("ingestRainNc records the uploaded file's length as size_bytes") {
+    val eng = newEngine()
+    val nc = Files.createTempFile("chirps", ".nc")
+    Files.write(nc, FileBuilders.nc(
+      times = Seq(0.0), timeUnits = "days since 2023-06-01",
+      lats = Seq(18.75, 18.80), lons = Seq(98.95, 99.00),
+      precip = Seq(Seq(Seq(12.0f, 4.0f), Seq(8.0f, 0.0f)))))
+    val cellMap = (for (lat <- Seq(18.75, 18.80); lon <- Seq(98.95, 99.00))
+      yield (lat, lon, "Chiang Mai", "Mueang Chiang Mai"))
+      .toDF("latitude", "longitude", "province", "district")
+    eng.ingestRainNc(nc.toString, cellMap) // no dims seeded: no rows, one upload
+    val sizes = eng.listUploads(Engine.UploadRainT)
+      .select("filename", "size_bytes").collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(sizes.toSeq == Seq((nc.getFileName.toString, Files.size(nc))))
+    assert(Files.size(nc) > 0)
   }
 
   test("register → upload → list with owner join (upload-ownership flow)") {

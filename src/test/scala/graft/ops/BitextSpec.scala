@@ -51,25 +51,6 @@ class BitextSpec extends SparkSpec {
       .where(col("tid") === 14L).count() == 0, "null embeddings must drop")
   }
 
-  test("annCandidates (covering LSH, both directions) mines identically to brute candidates") {
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id").as("id"), col("embedding"))
-    val s = e.where(col("id") % 2 === 0)
-    val t = e.where(col("id") % 2 === 1)
-    val nT = t.count().toInt
-    def mined(pairs: org.apache.spark.sql.DataFrame) =
-      Bitext.mine(pairs, k = 4, threshold = 1.0)
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          math.round(r.getDouble(2) * 1e9))).toSet
-    // covering buckets + corpus-sized k ⇒ the ANN tier sees every
-    // pair ⇒ the production composition reproduces brute mining
-    // bit-for-bit (margins compared at 9 dp)
-    val brute = mined(Bitext.bruteCandidates(s, t))
-    val ann = mined(Bitext.annCandidates(s, t, k = math.max(nT, 1), nBits = 0, nTables = 2))
-    assert(ann == brute, "recall-complete ANN tier diverged from brute mining")
-    assert(brute.nonEmpty, "fixture mined nothing — weak")
-  }
-
   test("ivfCandidates (full probe, both directions) mines identically to brute candidates") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding"))
@@ -120,8 +101,7 @@ class BitextSpec extends SparkSpec {
     // union's top-k by cosine IS its true top-k (any extra pair beating
     // the kth would itself be in the true top-k), so ranks,
     // neighbourhood means, margins, and the mutual-best windows all
-    // coincide with brute's. (The LSH tier is caller-chosen only — its
-    // covering ≡-brute pin is the annCandidates test above.)
+    // coincide with brute's.
     val viaIvf = canon(Bitext.bitextMine(s, t, k = 4, threshold = 1.0,
       bruteMax = 0, nlist = 4, nprobe = 4, ivfIters = 2))
     assert(viaIvf == brute, "IVF route diverged from brute mining")

@@ -65,8 +65,6 @@ rm -f "$STAT"
 # program stdout (Spark logs, Bench's own println) → stderr; the stat
 # file is the one channel log framing can never touch
 java "${ADD_OPENS[@]}" \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "$CLASSES:/opt/spark/jars/*" \
   graft.Bench "$@" 1>&2

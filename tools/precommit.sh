@@ -14,6 +14,15 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# one session factory: every entry point and spec builds its session
+# through graft.GraftSession, so results cannot depend on which main ran
+builders=$(grep -rn "SparkSession.builder" src/ | grep -v "^src/main/scala/graft/GraftSession.scala:" || true)
+if [[ -n "$builders" ]]; then
+  echo "[precommit] FAIL — SparkSession.builder outside GraftSession.scala:"
+  echo "$builders"
+  exit 1
+fi
+
 echo "[precommit] compiling main + test sources..."
 sbt -batch compile Test/compile > /tmp/precommit_compile.log 2>&1 || {
   echo "[precommit] FAIL — compile broken; tail of log:"
@@ -25,7 +34,7 @@ echo "[precommit] compile green."
 if [[ "${FULL:-0}" == "1" ]]; then
   echo "[precommit] running sf0.001 smoke (Verify)..."
   rm -rf /tmp/precommit_vout
-  SPARK_GRAFT_CPUS=8 sbt -batch \
+  sbt -batch \
     "runMain graft.Verify /root/testdata/sf0.001 /tmp/precommit_vout" \
     > /tmp/precommit_verify.log 2>&1 || {
     echo "[precommit] FAIL — Verify crashed; tail of log:"

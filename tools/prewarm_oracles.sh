@@ -41,8 +41,7 @@ echo "[prewarm] duckdb version $( [ -f "$STAMP" ] && cat "$STAMP" || echo '<none
 
 if [ ! -f "$ORACLES" ]; then
   echo "[prewarm] no oracle_sql.json at $ORACLES — dumping via graft.Verify at sf0.001"
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
-    sbt -batch "runMain graft.Verify /root/testdata/sf0.001 target/prewarm" 1>&2
+  sbt -batch "runMain graft.Verify /root/testdata/sf0.001 target/prewarm" 1>&2
 fi
 
 python3 tools/compare.py --prewarm "$SF_DIR" "$ORACLES"
