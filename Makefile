@@ -8,7 +8,9 @@ VOUT      ?= /tmp/vout
 SOAK_X    ?= 10
 SOAK_OUT  ?= target/soak
 
-.PHONY: compile test verify bench prewarm soak
+RUNS      ?= 10
+
+.PHONY: compile test verify bench prewarm soak abbench
 
 compile:
 	sbt -batch compile
@@ -43,3 +45,12 @@ soak:
 	SPARK_GRAFT_SF_DIR=$(SOAK_OUT)/x$(SOAK_X) SPARK_GRAFT_BENCH_FULL=$(SOAK_OUT)/bench_x$(SOAK_X).json \
 	  SPARK_GRAFT_BENCH_STAT=$(SOAK_OUT)/stat_x$(SOAK_X).json tools/bench.sh > /dev/null
 	python3 tools/growth.py $(SOAK_OUT)/bench_x1.json $(SOAK_OUT)/bench_x$(SOAK_X).json $(SOAK_X)
+
+# paired benchmark runs, this checkout against PARENT=<ref> (checked
+# out into a git worktree under .bench_build/abbench/): $(RUNS) pairs of
+# every BENCHMARK.json workload, same seed on both sides, the side that
+# runs first alternating from pair to pair. PARENT has no default: the
+# right baseline depends on how many commits the change spans.
+abbench:
+	$(if $(PARENT),,$(error abbench: PARENT=<ref> required))
+	python3 tools/abbench.py --parent $(PARENT) --runs $(RUNS)

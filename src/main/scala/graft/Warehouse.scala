@@ -171,7 +171,15 @@ final class Warehouse(spark: SparkSession, root: String,
     walk(p, "").filter(_.nonEmpty)
   }
 
+  /** The table as stored, its schema taken from the parquet footers
+    * (one inference job). For the maintenance verbs and tables without
+    * a declaration; the engine's own tables go through [[readOrEmpty]]. */
   def read(table: String): DataFrame = {
+    failIfTorn(table)
+    spark.read.parquet(path(table))
+  }
+
+  private def failIfTorn(table: String): Unit = {
     // DETECT an interrupted selective [[optimize]] before the scan: its
     // per-dir swap has a rename window where one partition dir is
     // missing (old data safe in the __optimize_old sibling), and
@@ -185,7 +193,7 @@ final class Warehouse(spark: SparkSession, root: String,
     // same contract as compact()'s whole-table swap instant. The
     // marker probe is one cached-FileSystem exists() per call.
     // NOTE the guard NARROWS the window rather than closing it: the
-    // probe and the spark.read file listing below are not atomic, so a
+    // probe and the caller's spark.read file listing are not atomic, so a
     // scan that lists files just as a live optimize's two renames land
     // can still see a partial tree — acceptable under the
     // single-writer / retryable-read contract (reads during the
@@ -226,7 +234,6 @@ final class Warehouse(spark: SparkSession, root: String,
       } else if (markerProbeTtlMs > 0)
         markerClearUntil.put(table, now + markerProbeTtlMs)
     }
-    spark.read.parquet(path(table))
   }
 
   // Resolved through Hadoop's FileSystem, not java.io.File: with an
@@ -238,10 +245,25 @@ final class Warehouse(spark: SparkSession, root: String,
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
+  /** The table read with its DECLARED `schema`, or an empty frame of
+    * that schema when the table does not exist yet. Both branches give
+    * exactly `schema`'s column names, order and types, and neither
+    * starts a Spark job: the parquet footers are not consulted, which
+    * is what makes a request's read free of schema inference. The
+    * contract is on the writer: every file under the table must carry
+    * the declared columns with the declared types. A declared column
+    * missing from a file reads as null and a mistyped one fails the
+    * scan, so writers check their frames against the same declaration
+    * (the engine's `Engine.writeTable`). Same torn-optimize guard as
+    * [[read]]. */
   def readOrEmpty(table: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (exists(table)) read(table)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
+    if (exists(table)) {
+      failIfTorn(table)
+      // a partition column comes last in a file-source scan; select
+      // restores the declared order
+      spark.read.schema(schema).parquet(path(table)).select(schema.fieldNames.toIndexedSeq
+        .map(n => org.apache.spark.sql.functions.col("`" + n.replace("`", "``") + "`")): _*)
+    } else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
 
   /** Partition-selective OPTIMIZE - [[compact]]'s maintenance twin for

@@ -2,9 +2,13 @@ package graft.domain
 
 import graft.Warehouse
 import graft.sources.{DbfReader, XlsxReader}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.Try
 
 /** The engine facade — the drop-in replacement surface for the
   * reference backend (SURVEY.md §0): dimension seeding, the three
@@ -16,6 +20,10 @@ import org.apache.spark.sql.functions._
   * rows — SURVEY §6: ~38k rows/year-file), so the single-partition
   * window inside one append is bounded by construction; fact-table
   * scans never pay it.
+  *
+  * Every table is read with its declared schema ([[Engine.Declared]],
+  * through [[graft.Warehouse.readOrEmpty]]) and written through
+  * `writeTable`, which checks each frame against that declaration.
   */
 final class Engine(spark: SparkSession, wh: Warehouse,
     jwtSecret: String = "change-me") {
@@ -24,10 +32,24 @@ final class Engine(spark: SparkSession, wh: Warehouse,
 
   // ---- dimension access ----
 
-  def provinces: DataFrame = wh.readOrEmpty(ProvinceT,
-    org.apache.spark.sql.types.StructType(Schemas.province.filter(_.name != "time_create")))
-  def districts: DataFrame = wh.readOrEmpty(DistrictT,
-    org.apache.spark.sql.types.StructType(Schemas.district.filter(_.name != "time_create")))
+  private def table(name: String): DataFrame = wh.readOrEmpty(name, Declared(name))
+
+  /** Appends (or overwrites with) `df` after checking it against the
+    * table's declaration, and returns the rows written, counted by an
+    * observation on the write's own job rather than by a second pass
+    * over the frame's lineage. */
+  private[domain] def writeTable(name: String, df: DataFrame,
+      mode: SaveMode = SaveMode.Append): Long = {
+    requireDeclared(name, df.schema)
+    val written = Observation()
+    wh.write(name, df.observe(written, count(lit(1)).as("rows")), mode)
+    // the observation completes when the write does; the count is a
+    // fallback for a plan that dropped the observing node
+    Try(Await.result(written.future, 10.seconds).getLong(0)).getOrElse(df.count())
+  }
+
+  def provinces: DataFrame = table(ProvinceT)
+  def districts: DataFrame = table(DistrictT)
 
   /** POST /init analog: seed dims from the ADM2 attribute table
     * (idempotent — reruns add nothing). */
@@ -41,14 +63,14 @@ final class Engine(spark: SparkSession, wh: Warehouse,
     // would throw. Materialize first (dims are ≤ 928 rows), then swap.
     val provMat = dims.provinces.localCheckpoint(true)
     val distMat = dims.districts.localCheckpoint(true)
-    wh.write(ProvinceT, provMat, SaveMode.Overwrite)
-    wh.write(DistrictT, distMat, SaveMode.Overwrite)
+    writeTable(ProvinceT, provMat, SaveMode.Overwrite)
+    writeTable(DistrictT, distMat, SaveMode.Overwrite)
     DimInit.Dims(provinces, districts)
   }
 
   // ---- users (models.py:7-13; main.py:66-107) ----
 
-  private def users: DataFrame = wh.readOrEmpty(UsersT, Schemas.users)
+  private def users: DataFrame = table(UsersT)
 
   // Salted password hashing (the reference hashes via passlib and
   // verifies on login, main.py:66-107). Scheme: PBKDF2-HMAC-SHA256,
@@ -96,7 +118,7 @@ final class Engine(spark: SparkSession, wh: Warehouse,
       throw new IllegalArgumentException(s"username already registered: $u")
     val id = users.agg(coalesce(max(col("user_id")), lit(0))).first().getInt(0) + 1
     import spark.implicits._
-    wh.write(UsersT, Seq((id, u, hashPassword(password), fullName))
+    writeTable(UsersT, Seq((id, u, hashPassword(password), fullName))
       .toDF("user_id", "username", "password_hash", "full_name")
       .withColumn("time_create", current_timestamp()))
     id
@@ -131,7 +153,7 @@ final class Engine(spark: SparkSession, wh: Warehouse,
   /** Upload metadata with the owner resolved through the users table —
     * the upload-ownership flow (`owner_id` FK, models.py:15-24). */
   def listUploads(table: String): DataFrame =
-    wh.readOrEmpty(table, Schemas.uploadMeta)
+    this.table(table)
       .join(broadcast(users.select(col("user_id"), col("username"), col("full_name"))),
         col("owner_id") === col("user_id"), "left")
       .drop("user_id")
@@ -146,11 +168,10 @@ final class Engine(spark: SparkSession, wh: Warehouse,
     df.withColumn(idCol,
       (row_number().over(Window.orderBy(monotonically_increasing_id())) + start).cast("long"))
 
-  private def recordUpload(table: String, filename: String, sizeBytes: Long, ownerId: Int): Long = {
-    val existing = wh.readOrEmpty(table, Schemas.uploadMeta)
-    val id = nextId(existing, "upload_id") + 1
+  private def recordUpload(name: String, filename: String, sizeBytes: Long, ownerId: Int): Long = {
+    val id = nextId(table(name), "upload_id") + 1
     import spark.implicits._
-    wh.write(table, Seq((id, filename, s"storage/$filename", sizeBytes, "application/octet-stream", ownerId))
+    writeTable(name, Seq((id, filename, s"storage/$filename", sizeBytes, "application/octet-stream", ownerId))
       .toDF("upload_id", "filename", "storage_path", "size_bytes", "content_type", "owner_id")
       .withColumn("time_create", current_timestamp()))
     id
@@ -166,12 +187,10 @@ final class Engine(spark: SparkSession, wh: Warehouse,
       sizeBytes: Long = 0L): Long = {
     val uploadId = recordUpload(UploadRainT, filename, sizeBytes, ownerId)
     val rows = RainIngest.ingest(spark, grid, cellMap, provinces, districts, uploadId, northProvsEn)
-    val existing = wh.readOrEmpty(RainT, Schemas.rainPoints)
-    val out = withPk(rows, "pk_id", nextId(existing, "pk_id"))
+    val out = withPk(rows, "pk_id", nextId(table(RainT), "pk_id"))
       .select("pk_id", "upload_id", "date", "year", "province_id", "district_id",
         "rain_mm_wmean", "rainfall_mm")
-    wh.write(RainT, out)
-    out.count()
+    writeTable(RainT, out)
   }
 
   /** POST /upload analog from the raw `.nc` file itself — the DSv2
@@ -196,11 +215,9 @@ final class Engine(spark: SparkSession, wh: Warehouse,
     val uploadRiskId = recordUpload(UploadRiskT, new java.io.File(path).getName,
       new java.io.File(path).length(), ownerId)
     val rows = RiskIngest.ingest(spark, dbf, provinces, districts, uploadRiskId, specialFix)
-    val existing = wh.readOrEmpty(RiskT, Schemas.riskPoints)
-    val out = withPk(rows, "risk_id", nextId(existing, "risk_id"))
+    val out = withPk(rows, "risk_id", nextId(table(RiskT), "risk_id"))
       .select("risk_id", "upload_risk_id", "province_id", "district_id", "risk_level")
-    wh.write(RiskT, out)
-    out.count()
+    writeTable(RiskT, out)
   }
 
   /** POST /upload_excel analog (incident log → incident counts),
@@ -215,13 +232,12 @@ final class Engine(spark: SparkSession, wh: Warehouse,
         .getOrElse(throw new IllegalArgumentException(
           s"sheet '$sheet' carries neither header format"))
     }
-    val existing = wh.readOrEmpty(IncidentT, Schemas.incidentStatisticsPoints)
+    val existing = table(IncidentT)
     val rows = IncidentIngest.ingest(spark, file, provinces, districts, existing)
     val out = withPk(rows, "incident_id", nextId(existing, "incident_id"))
       .select("incident_id", "disaster_date", "year", "province_id", "district_id",
         "count_of_disasters")
-    wh.write(IncidentT, out)
-    out.count()
+    writeTable(IncidentT, out)
   }
 
   /** Warehouse OPTIMIZE pass — the maintenance twin of the reference's
@@ -247,9 +263,9 @@ final class Engine(spark: SparkSession, wh: Warehouse,
 
   // ---- serving ----
 
-  private def rain = wh.readOrEmpty(RainT, Schemas.rainPoints)
-  private def risk = wh.readOrEmpty(RiskT, Schemas.riskPoints)
-  private def incidents = wh.readOrEmpty(IncidentT, Schemas.incidentStatisticsPoints)
+  private def rain = table(RainT)
+  private def risk = table(RiskT)
+  private def incidents = table(IncidentT)
 
   def listProvince(): DataFrame = ListQueries.listProvince(provinces)
   def listDistrict(provinceId: Option[Int] = None): DataFrame =
@@ -302,6 +318,30 @@ object Engine {
   val UploadRainT = "upload_rain_point"
   val UploadRiskT = "upload_risk"
   val UsersT = "users"
+
+  /** The declared schema of every engine table: what its reads trust
+    * and what every write must match. */
+  val Declared: Map[String, StructType] = Map(
+    ProvinceT -> Schemas.province,
+    DistrictT -> Schemas.district,
+    RainT -> Schemas.rainPoints,
+    RiskT -> Schemas.riskPoints,
+    IncidentT -> Schemas.incidentStatisticsPoints,
+    UploadRainT -> Schemas.uploadMeta,
+    UploadRiskT -> Schemas.uploadMeta,
+    UsersT -> Schemas.users)
+
+  /** A frame may be written to `table` only if its column names and
+    * types are exactly the declaration's (order and nullability aside:
+    * parquet reads resolve columns by name). A missing column would
+    * read back as null and a mistyped one would fail every later scan. */
+  private def requireDeclared(table: String, schema: StructType): Unit = {
+    val declared = Declared(table)
+    def typed(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
+    require(schema.size == declared.size && typed(schema) == typed(declared),
+      s"frame for $table does not match its declared schema: got " +
+        s"${schema.simpleString}, declared ${declared.simpleString}")
+  }
 
   /** Per-table serving layouts, chosen from each table's endpoint
     * mix. The dated fact tables serve BOTH date-RANGE windows

@@ -1,8 +1,10 @@
 package graft.domain
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.SortOrder
+import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** The serving layer: filtered + dynamically-sorted + paginated list
   * queries, the date-limit aggregate, and the four-way "graph" query
@@ -27,31 +29,70 @@ object ListQueries {
   final case class PageResult(
       page: Int, pageSize: Int, total: Long, allPage: Long, items: DataFrame)
 
-  /** A1 + T1 + T3 with the reference's exact quirks: count first;
+  /** A1 + T1 + T3 with the reference's exact quirks:
     * `all_page = max(ceil(total/page_size), 1)`; page CLAMPED to the
     * last page; unknown `order_by` falls back to a per-endpoint column.
-    * The filtered frame is cached between the count and the fetch
-    * (our one "physical" decision — SURVEY §4). */
+    *
+    * One pass: an observation below the sort counts every row of the
+    * filtered frame while the same job takes the requested page. Only
+    * a request past the last page needs a second pass, for the clamped
+    * page. The count is trusted only when the page ran as a top-k that
+    * drained its whole input; any other plan (the optimizer drops the
+    * limit of a frame known to be small, or the input already arrives
+    * in sort order) counts the frame separately. The page (≤ 200 rows)
+    * comes back as a local frame, so `items` never re-runs the query.
+    * `items` and `total` come from the same pass, and so always agree,
+    * only for an in-range page on the top-k path. On the other paths
+    * (the separate count, or the second pass for a clamped page) they
+    * come from two passes with nothing cached between them: an upload
+    * that lands between the passes can make them disagree. */
   def paginate(
       df: DataFrame,
       sortable: Map[String, Column],
       fallback: Column,
       req: PageRequest): PageResult = {
-    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val total = cached.count()
-      val allPage = math.max((total + req.pageSize - 1) / req.pageSize, 1L)
-      val page = math.min(req.page.toLong, allPage).toInt
-      val key = sortable.getOrElse(req.orderBy, fallback)
-      val sorted = cached.orderBy(if (req.orderType == "asc") key.asc else key.desc)
-      // Materialize the page (≤ 200 rows) BEFORE the unpersist below:
-      // a lazy `items` would recompute the whole lineage after the
-      // cache is gone, and could even disagree with `total` if the
-      // underlying table changed between the count and the fetch.
-      val items = sorted.offset((page - 1) * req.pageSize).limit(req.pageSize)
-        .localCheckpoint(true)
-      PageResult(page, req.pageSize, total, allPage, items)
-    } finally cached.unpersist(blocking = false)
+    val sorted = pageQuery(df, sortable, fallback, req)
+    // offsets past Int range are past the end of any table this serves
+    val lastOffset = Int.MaxValue - req.pageSize
+    def fetch(page: Long): (Array[Row], Option[Long]) = {
+      val q = sorted.offset(math.min((page - 1) * req.pageSize, lastOffset).toInt)
+        .limit(req.pageSize)
+      val rows = q.collect()
+      val counted = Some(q.queryExecution).filter(qe => drainsInput(qe.executedPlan))
+        .flatMap(_.observedMetrics.get(TotalMetric))
+      (rows, counted.map(_.getLong(0)))
+    }
+    val (requested, observed) = fetch(req.page)
+    val total = observed.getOrElse(df.count())
+    val allPage = math.max((total + req.pageSize - 1) / req.pageSize, 1L)
+    val page = math.min(req.page.toLong, allPage).toInt
+    val rows = if (page == req.page) requested else fetch(page)._1
+    val items = df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    PageResult(page, req.pageSize, total, allPage, items)
+  }
+
+  private val TotalMetric = "graft_page_total"
+
+  /** Whether `plan` is a top-k that read every row below it: a
+    * TakeOrderedAndProject whose input is not already in sort order
+    * (on sorted input it takes only each partition's head). A full
+    * sort instead runs its input twice, once to sample the range
+    * bounds, and an observation below it counts both. */
+  private def drainsInput(plan: SparkPlan): Boolean = plan match {
+    case a: AdaptiveSparkPlanExec => drainsInput(a.executedPlan)
+    case s: QueryStageExec => drainsInput(s.plan)
+    case t: TakeOrderedAndProjectExec =>
+      !SortOrder.orderingSatisfies(t.child.outputOrdering, t.sortOrder)
+    case _ => false
+  }
+
+  /** The frame [[paginate]] runs: `df` with its row count observed, in
+    * the requested order. */
+  def pageQuery(df: DataFrame, sortable: Map[String, Column], fallback: Column,
+      req: PageRequest): DataFrame = {
+    val key = sortable.getOrElse(req.orderBy, fallback)
+    df.observe(TotalMetric, count(lit(1)))
+      .orderBy(if (req.orderType == "asc") key.asc else key.desc)
   }
 
   /** Optional equality / range filters with the 'all' sentinel
@@ -90,20 +131,27 @@ object ListQueries {
 
   /** GET /list_rain (main.py:240-330). Fallback sort: `date`. */
   def listRain(rain: DataFrame, provinces: DataFrame, districts: DataFrame,
-      filters: FactFilters = FactFilters(), req: PageRequest = PageRequest()): PageResult = {
+      filters: FactFilters = FactFilters(), req: PageRequest = PageRequest()): PageResult =
+    paginate(rainRows(rain, provinces, districts, filters), RainSort, col("date"), req)
+
+  /** The rows GET /list_rain pages through: the filtered facts with
+    * both dims' names. */
+  def rainRows(rain: DataFrame, provinces: DataFrame, districts: DataFrame,
+      filters: FactFilters): DataFrame = {
     val base = applyConds(rain, conds(filters, Some("date")))
-    val joined = withDims(base, provinces, districts)
+    withDims(base, provinces, districts)
       .select(col("pk_id"), col("date"), col("rain_mm_wmean"),
         col("province_id"), col("district_id"),
         col("province_name"), col("province_name_en"),
         col("district_name"), col("district_name_en"))
-    paginate(joined, Map(
-      "date" -> col("date"),
-      "rain_mm_wmean" -> col("rain_mm_wmean"),
-      "province_name" -> col("province_name"),
-      "district_name" -> col("district_name")),
-      fallback = col("date"), req)
   }
+
+  /** GET /list_rain's `order_by` whitelist. */
+  val RainSort: Map[String, Column] = Map(
+    "date" -> col("date"),
+    "rain_mm_wmean" -> col("rain_mm_wmean"),
+    "province_name" -> col("province_name"),
+    "district_name" -> col("district_name"))
 
   /** GET /list_risk (main.py:476-525). Fallback sort: the DISTRICT
     * dim's province_id (main.py:503 quirk — not the fact's). */
@@ -160,16 +208,18 @@ object ListQueries {
       fallback = col("province_id"), req)
   }
 
-  /** GET /list_province (main.py:175-186). */
+  /** GET /list_province (main.py:175-186). Dims are sorted inside one
+    * partition (≤928 rows nationally): one job, where a global sort
+    * would add a range-sampling job and a shuffle. */
   def listProvince(provinces: DataFrame): DataFrame =
     provinces.select("province_id", "province_name", "province_name_en")
-      .orderBy("province_id")
+      .coalesce(1).orderBy("province_id")
 
   /** GET /list_district (main.py:190-217). */
   def listDistrict(districts: DataFrame, provinceId: Option[Int] = None): DataFrame = {
     val base = provinceId.map(id => districts.where(col("province_id") === id)).getOrElse(districts)
     base.select("district_id", "district_name", "district_name_en", "province_id")
-      .orderBy("province_id", "district_id")
+      .coalesce(1).orderBy("province_id", "district_id")
   }
 
   /** GET /get_date_limit (main.py:664-680): global min/max rain date. */

@@ -11,18 +11,18 @@ import org.apache.spark.sql.types._
   */
 object Schemas {
 
+  /** The dims as seeded: the reference's `time_create` audit column is
+    * not carried (DimInit writes none). */
   val province: StructType = StructType(Seq(
     StructField("province_id", IntegerType, nullable = false),
     StructField("province_name", StringType),
-    StructField("province_name_en", StringType),
-    StructField("time_create", TimestampType)))
+    StructField("province_name_en", StringType)))
 
   val district: StructType = StructType(Seq(
     StructField("district_id", IntegerType, nullable = false),
     StructField("district_name", StringType),
     StructField("district_name_en", StringType),
-    StructField("province_id", IntegerType),
-    StructField("time_create", TimestampType)))
+    StructField("province_id", IntegerType)))
 
   /** Grain: one row per district per day per upload (models.py:44-55). */
   val rainPoints: StructType = StructType(Seq(

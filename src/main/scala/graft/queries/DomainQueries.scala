@@ -128,19 +128,7 @@ object DomainQueries {
   /** q_list_page — the generic paginator end-to-end (count, envelope,
     * whitelist sort, offset/limit) over an orders-derived rain table. */
   def qListPage(s: SparkSession, dir: String): DataFrame = {
-    val provinces = provFromNation(s, dir)
-    val districts = Tables.customer(s, dir).where(col("c_custkey") < 500).select(
-      col("c_custkey").cast("int").as("district_id"),
-      concat(lit("C"), col("c_custkey").cast("string")).as("district_name"),
-      concat(lit("CE"), col("c_custkey").cast("string")).as("district_name_en"),
-      (col("c_nationkey") + 1).cast("int").as("province_id"))
-    val provs = provinces // province_name_en == province_name here
-    val rain = Tables.orders(s, dir).select(
-      col("o_orderkey").as("pk_id"),
-      col("o_orderdate").cast("date").as("date"),
-      col("o_orderkey").cast("double").as("rain_mm_wmean"), // unique sort key
-      (col("o_custkey") % 25 + 1).cast("int").as("province_id"),
-      (col("o_custkey") % 500).cast("int").as("district_id"))
+    val (rain, provs, districts) = listPageInputs(s, dir)
     val res = ListQueries.listRain(rain, provs, districts,
       ListQueries.FactFilters(provinceId = Some(7)),
       ListQueries.PageRequest(page = 2, pageSize = 50, orderBy = "rain_mm_wmean"))
@@ -150,6 +138,25 @@ object DomainQueries {
       .withColumn("all_page", lit(res.allPage))
       .withColumn("page", lit(res.page.toLong))
       .orderBy("rain_mm_wmean")
+  }
+
+  /** q_list_page's (rain, provinces, districts): orders as rain facts,
+    * nations as provinces (province_name_en == province_name here),
+    * the first 500 customers as districts. */
+  def listPageInputs(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val provinces = provFromNation(s, dir)
+    val districts = Tables.customer(s, dir).where(col("c_custkey") < 500).select(
+      col("c_custkey").cast("int").as("district_id"),
+      concat(lit("C"), col("c_custkey").cast("string")).as("district_name"),
+      concat(lit("CE"), col("c_custkey").cast("string")).as("district_name_en"),
+      (col("c_nationkey") + 1).cast("int").as("province_id"))
+    val rain = Tables.orders(s, dir).select(
+      col("o_orderkey").as("pk_id"),
+      col("o_orderdate").cast("date").as("date"),
+      col("o_orderkey").cast("double").as("rain_mm_wmean"), // unique sort key
+      (col("o_custkey") % 25 + 1).cast("int").as("province_id"),
+      (col("o_custkey") % 500).cast("int").as("district_id"))
+    (rain, provinces, districts)
   }
 
   /** q_graph_day — the four-way graph join + promoted risk score for

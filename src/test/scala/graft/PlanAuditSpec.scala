@@ -102,9 +102,20 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("dimension joins broadcast — no SortMergeJoin in the dim-join queries") {
-    for (name <- Seq("q_join_enrich", "q_list_page", "q_join_graph", "q_risk_pipeline"))
+    for (name <- Seq("q_join_enrich", "q_join_graph", "q_risk_pipeline"))
       assert(!plan(name).contains("SortMergeJoin"),
         s"$name: a dim join fell back to sort-merge")
+    // q_list_page's result is its page as a local relation, so its own
+    // plan holds no join: audit the query the paginator runs instead
+    import graft.domain.ListQueries
+    val (rain, provs, dists) = queries.DomainQueries.listPageInputs(spark, sfDir)
+    val page = ListQueries.pageQuery(
+      ListQueries.rainRows(rain, provs, dists, ListQueries.FactFilters(provinceId = Some(7))),
+      ListQueries.RainSort, org.apache.spark.sql.functions.col("date"),
+      ListQueries.PageRequest(page = 2, pageSize = 50, orderBy = "rain_mm_wmean"))
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(page.contains("BroadcastHashJoin"), s"list page query joins no dim by broadcast:\n$page")
+    assert(!page.contains("SortMergeJoin"), s"list page query: a dim join fell back to sort-merge:\n$page")
   }
 
   test("near-dup verify attaches broadcast — candidate streams never sort-merge") {

@@ -1,14 +1,16 @@
 package graft.domain
 
 import graft.{SparkSpec, Warehouse}
-import graft.testutil.FileBuilders
+import graft.testutil.{Adm2Fixture, FileBuilders}
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 /** End-to-end drive of the engine facade — the "a user of the reference
-  * switches to this library" flow: init dims from the real ADM2 table,
+  * switches to this library" flow: init dims from the ADM2 table,
   * upload a rain grid, a risk DBF, an incident XLSX (twice, proving
-  * idempotency), then serve every query. */
+  * idempotency), then serve every query. Each flow runs twice: on the
+  * reference's real ADM2 table where it is checked out, and on the
+  * generated [[Adm2Fixture]] everywhere. */
 class EngineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -19,15 +21,29 @@ class EngineSpec extends SparkSpec {
     new Engine(spark, new Warehouse(spark, root))
   }
 
-  test("full reference flow: init → three uploads → serving queries") {
+  private def realAdm2(): String = {
     assume(Files.exists(Paths.get(adm2Path)))
+    adm2Path
+  }
+
+  test("full reference flow: init → three uploads → serving queries") {
+    fullFlow(realAdm2(), provinces = 9, districts = 112, chiangMaiDistricts = 25)
+  }
+
+  test("full reference flow on a generated ADM2 table") {
+    fullFlow(Adm2Fixture.write(), Adm2Fixture.NorthernProvinces,
+      Adm2Fixture.NorthernDistricts, Adm2Fixture.ChiangMaiDistricts)
+  }
+
+  private def fullFlow(adm2: String, provinces: Int, districts: Int,
+      chiangMaiDistricts: Int): Unit = {
     val eng = newEngine()
 
     // ---- /init ----
-    eng.initDims(adm2Path)
-    assert(eng.provinces.count() == 9)
-    assert(eng.districts.count() == 112)
-    assert(eng.listProvince().count() == 9)
+    eng.initDims(adm2)
+    assert(eng.provinces.count() == provinces)
+    assert(eng.districts.count() == districts)
+    assert(eng.listProvince().count() == provinces)
 
     // ---- rain upload: grid over Mueang Chiang Mai ----
     val cmProv = eng.provinces.where($"province_name_en" === "Chiang Mai").head().getInt(0)
@@ -57,10 +73,10 @@ class EngineSpec extends SparkSpec {
     val dbfPath = Files.createTempFile("risk", ".dbf")
     Files.write(dbfPath, dbfBytes)
     val nRisk = eng.ingestRiskDbf(dbfPath.toString)
-    // 2 matched + every other Chiang Mai district filled with 1 → 25 rows
-    assert(nRisk == 25)
+    // 2 matched + every other Chiang Mai district filled with 1
+    assert(nRisk == chiangMaiDistricts)
     val riskLevels = eng.listRisk(req = ListQueries.PageRequest(pageSize = 200))
-    assert(riskLevels.total == 25)
+    assert(riskLevels.total == chiangMaiDistricts)
     val mueangRisk = riskLevels.items
       .where($"district_id" === cmDistRow.getInt(0)).head().getAs[Int]("risk_level")
     assert(mueangRisk == 3)
@@ -114,9 +130,16 @@ class EngineSpec extends SparkSpec {
   }
 
   test("rain ingest through the NetCDF DSv2: bbox reaches the scan, prunes partitions") {
-    assume(Files.exists(Paths.get(adm2Path)))
+    netcdfFlow(realAdm2())
+  }
+
+  test("rain ingest through the NetCDF DSv2 on a generated ADM2 table") {
+    netcdfFlow(Adm2Fixture.write())
+  }
+
+  private def netcdfFlow(adm2: String): Unit = {
     val eng = newEngine()
-    eng.initDims(adm2Path)
+    eng.initDims(adm2)
     val nc = Files.createTempFile("chirps", ".nc")
     Files.write(nc, FileBuilders.nc(
       times = Seq(0.0, 1.0), timeUnits = "days since 2023-06-01",
@@ -181,9 +204,16 @@ class EngineSpec extends SparkSpec {
   }
 
   test("register → upload → list with owner join (upload-ownership flow)") {
-    assume(Files.exists(Paths.get(adm2Path)))
+    ownershipFlow(realAdm2())
+  }
+
+  test("upload-ownership flow on a generated ADM2 table") {
+    ownershipFlow(Adm2Fixture.write())
+  }
+
+  private def ownershipFlow(adm2: String): Unit = {
     val eng = newEngine()
-    eng.initDims(adm2Path)
+    eng.initDims(adm2)
     val uid = eng.registerUser("analyst", "s3cret-pw", "A. Nalyst")
     assert(uid == 1)
     assert(eng.registerUser("second", "h2") == 2)
@@ -224,22 +254,36 @@ class EngineSpec extends SparkSpec {
   }
 
   test("initDims re-seed is idempotent (overwrite-while-reading guarded)") {
-    assume(Files.exists(Paths.get(adm2Path)))
+    reseedFlow(realAdm2(), provinces = 9, districts = 112)
+  }
+
+  test("initDims re-seed is idempotent on a generated ADM2 table") {
+    reseedFlow(Adm2Fixture.write(), Adm2Fixture.NorthernProvinces, Adm2Fixture.NorthernDistricts)
+  }
+
+  private def reseedFlow(adm2: String, provinces: Int, districts: Int): Unit = {
     val eng = newEngine()
-    eng.initDims(adm2Path)
+    eng.initDims(adm2)
     // second seed reads the freshly-written dims while overwriting the
     // same paths — must neither throw UNSUPPORTED_OVERWRITE.PATH nor
     // change the dimension contents
-    eng.initDims(adm2Path)
-    assert(eng.provinces.count() == 9)
-    assert(eng.districts.count() == 112)
-    assert(eng.provinces.select("province_id").distinct().count() == 9)
+    eng.initDims(adm2)
+    assert(eng.provinces.count() == provinces)
+    assert(eng.districts.count() == districts)
+    assert(eng.provinces.select("province_id").distinct().count() == provinces)
   }
 
   test("second rain upload continues primary keys and upload ids") {
-    assume(Files.exists(Paths.get(adm2Path)))
+    secondUploadFlow(realAdm2())
+  }
+
+  test("second rain upload continues primary keys on a generated ADM2 table") {
+    secondUploadFlow(Adm2Fixture.write())
+  }
+
+  private def secondUploadFlow(adm2: String): Unit = {
     val eng = newEngine()
-    eng.initDims(adm2Path)
+    eng.initDims(adm2)
     val t = Timestamp.valueOf("2023-07-01 00:00:00")
     def grid(p: Double) = Seq((t, 18.75, 98.95, p), (t, 18.80, 99.00, p))
       .toDF("time", "latitude", "longitude", "precip")
@@ -254,5 +298,22 @@ class EngineSpec extends SparkSpec {
     assert(rows.map(_.getAs[Long]("pk_id")).distinct.length == 2)
     // two upload rows with distinct ids → two distinct upload_ids … the
     // grain is one row per district per day PER UPLOAD (models.py:44-55)
+  }
+
+  test("a write must match its table's declared schema") {
+    val eng = newEngine()
+    val risk = Seq((1L, 1L, 1, 11, 2))
+      .toDF("risk_id", "upload_risk_id", "province_id", "district_id", "risk_level")
+    // column order is free (parquet resolves by name)
+    assert(eng.writeTable(Engine.RiskT, risk.select(risk.columns.reverse.toIndexedSeq.map(risk(_)): _*)) == 1)
+    val missing = intercept[IllegalArgumentException](
+      eng.writeTable(Engine.RiskT, risk.drop("risk_level")))
+    assert(missing.getMessage.contains(Engine.RiskT))
+    intercept[IllegalArgumentException](
+      eng.writeTable(Engine.RiskT, risk.withColumn("risk_level", $"risk_level".cast("string"))))
+    intercept[IllegalArgumentException](
+      eng.writeTable(Engine.RiskT, risk.withColumn("extra", $"risk_level")))
+    // nothing of the refused frames reached the table
+    assert(eng.listRisk().total == 1)
   }
 }

@@ -1,7 +1,7 @@
 package graft.domain
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr, lit}
 import java.sql.Date
 
 class ListQueriesSpec extends SparkSpec {
@@ -107,6 +107,83 @@ class ListQueriesSpec extends SparkSpec {
     // score: rain 3.5/2 + risk*10 + boost: cnt=2 → max(80, base+10)
     val s = out.map(_.getAs[Double]("score")).toSeq
     assert(s == Seq(80.0, 80.0))
+  }
+
+  // ---- the one-pass paginator's edges ----
+
+  /** Every request must come back: an observation that never reports
+    * would block the caller, so each edge runs under a time limit. */
+  private def quick[T](body: => T): T = {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val interrupt: Signaler = ThreadSignaler
+    TimeLimits.failAfter(120.seconds)(body)
+  }
+
+  private def assertEmptyEnvelope(res: PageResult): Unit = {
+    assert((res.total, res.allPage, res.page) == ((0L, 1L, 1)))
+    assert(res.items.collect().isEmpty)
+    assert(res.items.columns.toSeq == Seq("pk_id", "date", "rain_mm_wmean",
+      "province_id", "district_id", "province_name", "province_name_en",
+      "district_name", "district_name_en"))
+  }
+
+  test("absent table (readOrEmpty's empty frame): total 0, one page, no rows") {
+    val wh = new graft.Warehouse(spark,
+      java.nio.file.Files.createTempDirectory("graft-lq").toString)
+    val none = wh.readOrEmpty("rain_points", Schemas.rainPoints)
+    for (page <- Seq(1, 3))
+      assertEmptyEnvelope(quick(listRain(none, provinces, districts, FactFilters(),
+        PageRequest(page = page, pageSize = 10, orderBy = "date"))))
+  }
+
+  test("a filter that matches nothing: total 0, one page, no rows") {
+    for (page <- Seq(1, 2)) {
+      assertEmptyEnvelope(quick(listRain(rain, provinces, districts,
+        FactFilters(provinceId = Some(99)), PageRequest(page = page, pageSize = 2))))
+      // the same over a parquet scan, which the optimizer cannot fold
+      val dir = java.nio.file.Files.createTempDirectory("graft-lq").toString
+      rain.write.mode("overwrite").parquet(dir)
+      assertEmptyEnvelope(quick(listRain(spark.read.parquet(dir), provinces, districts,
+        FactFilters(dateStart = Some("2030-01-01")), PageRequest(page = page, pageSize = 2))))
+    }
+  }
+
+  test("last page exactly, one past it, and an exact fit") {
+    def ids(res: PageResult) = res.items.collect().map(_.getAs[Long]("pk_id")).toSeq
+    val last = quick(listRain(rain, provinces, districts, FactFilters(),
+      PageRequest(page = 3, pageSize = 2, orderBy = "date")))
+    assert((last.total, last.allPage, last.page) == ((5L, 3L, 3)) && ids(last) == Seq(5L))
+    val past = quick(listRain(rain, provinces, districts, FactFilters(),
+      PageRequest(page = 4, pageSize = 2, orderBy = "date")))
+    assert((past.total, past.allPage, past.page) == ((5L, 3L, 3)) && ids(past) == Seq(5L))
+    val fit = quick(listRain(rain, provinces, districts, FactFilters(),
+      PageRequest(page = 2, pageSize = 5, orderBy = "date", orderType = "desc")))
+    assert((fit.total, fit.allPage, fit.page) == ((5L, 1L, 1)))
+    assert(ids(fit) == Seq(5L, 4L, 3L, 2L, 1L))
+  }
+
+  test("page_size 200 over 450 rows: full pages, the short last page, the clamp") {
+    val many = spark.range(1, 451).select(
+      $"id".as("pk_id"), lit(10L).as("upload_id"),
+      expr("date_add(date'2024-01-01', cast(id as int))").as("date"), lit(2024).as("year"),
+      lit(1).as("province_id"), lit(11).as("district_id"),
+      $"id".cast("double").as("rain_mm_wmean"), lit(0.0).as("rainfall_mm"))
+    def page(n: Int) = quick(listRain(many, provinces, districts, FactFilters(),
+      PageRequest(page = n, pageSize = 200, orderBy = "rain_mm_wmean")))
+    def ids(res: PageResult) = res.items.collect().map(_.getAs[Long]("pk_id")).toSeq
+    val second = page(2)
+    assert((second.total, second.allPage, second.page) == ((450L, 3L, 2)))
+    assert(ids(second) == (201L to 400L))
+    assert(ids(page(3)) == (401L to 450L))
+    val clamped = page(7)
+    assert(clamped.page == 3 && ids(clamped) == (401L to 450L))
+    // input that already arrives in sort order: the top-k reads only
+    // each partition's head, so the total must not come from it
+    val inOrder = many.withColumn("rain_mm_wmean", $"pk_id")
+    val res = quick(listRain(inOrder, provinces, districts, FactFilters(),
+      PageRequest(page = 2, pageSize = 200, orderBy = "rain_mm_wmean")))
+    assert((res.total, res.allPage, res.page) == ((450L, 3L, 2)) && ids(res) == (201L to 400L))
   }
 
   test("PageRequest bounds validated") {
