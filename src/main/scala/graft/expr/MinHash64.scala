@@ -9,10 +9,10 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** k-permutation MinHash signature over a hashed-shingle array in ONE
-  * codegen'd pass: sig[i] = min over shingles of (h·aᵢ + bᵢ), with the
-  * same odd-multiplier affine family as `Dedup.minhashSignature` — the
-  * k `array_min(transform(...))` formulation walks the array k times
-  * through interpreted lambdas; this walks it once.
+  * codegen'd pass: sig[i] = min over shingles of (h·aᵢ + bᵢ), over an
+  * odd-multiplier affine family — the k `array_min(transform(...))`
+  * formulation walks the array k times through interpreted lambdas;
+  * this walks it once.
   */
 case class MinHash64(child: Expression, k: Int) extends UnaryExpression {
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * the k-slot MinHash signature (same affine family as [[MinHash64]])
   * followed by one chained hash per r-slot band.
   *
-  * Exists because composing `minhashSignature` + per-band key
+  * Exists because composing a [[MinHash64]] signature + per-band key
   * expressions through a projection lets Catalyst's project-collapse
   * inline the signature into EVERY band expression — the k×|shingles|
   * signature pass re-runs `bands` times per row (measured 12× at

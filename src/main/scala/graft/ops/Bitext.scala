@@ -46,8 +46,8 @@ object Bitext {
     *
     * @param pairs     (`sid`, `tid`, `cosine`) candidate pairs — from
     *   brute force at gate scale or ANN top-k (both directions) at
-    *   production scale. Rows must be DISTINCT per (sid, tid) — every
-    *   shipped tier ends in `.distinct()`; a caller composing its own
+    *   production scale. Rows must be DISTINCT per (sid, tid) —
+    *   [[bruteCandidates]] yields each pair once; a caller composing its own
     *   tiers (e.g. unioning both ANN directions) must dedup first, or
     *   duplicate rows are counted in the neighbourhood means (the
     *   rank-pruned top-k unions would also collapse them afterward —
@@ -63,8 +63,8 @@ object Bitext {
     Reserved.requireAbsent("bitext.mine",
       Seq("__rs", "__rt", "__aks", "__akt", "__margin", "__bs", "__bt"), pairs)
     // materialize the candidates once: the two per-side top-k windows
-    // below each reference them, and every shipped tier's pairs frame
-    // is expensive to recompute (a brute cross product, or ANN probes)
+    // below each reference them, and a pairs frame is expensive to
+    // recompute (a brute cross product, or ANN probes)
     val cand = pairs.select(col("sid"), col("tid"), col("cosine"))
       .localCheckpoint(true)
     val wS = Window.partitionBy("sid").orderBy(col("cosine").desc, col("tid"))
@@ -76,7 +76,7 @@ object Bitext {
     // |pairs| — the old chained form shuffled the FULL candidate set
     // twice because the `__rs ≤ k OR __rt ≤ k` filter could prune
     // neither window. Candidate tiers emit distinct (sid, tid) rows
-    // (all three shipped tiers do), so the union-distinct below is
+    // (the contract above), so the union-distinct below is
     // exactly the OR-filtered row set of the chained form.
     val topS = cand.withColumn("__rs", row_number().over(wS))
       .where(col("__rs") <= k).drop("__rs")
@@ -104,96 +104,6 @@ object Bitext {
       .where(col("__bs") === 1 && col("__bt") === 1 &&
         col("__margin") >= threshold)
       .select(col("sid"), col("tid"), col("__margin").as("margin"))
-  }
-
-  /** Default crossover (rows PER SIDE) below which the brute tier's
-    * broadcast cross product is the right candidate source: it is
-    * EXACT, and under ~2 k rows it costs what the IVF tier's two
-    * quantizer fits cost anyway (r17 sweep, 64-dim embeddings,
-    * 8 cpus, k = 8: at 1 k/side brute 4.3 s vs IVF 3.7 s; at 2 k
-    * 7.5 s vs 4.4 s; by 6 k the quadratic has taken over, 41 s vs
-    * 8.6 s). */
-  val DefaultBruteMax: Long = 2000L
-
-  /** THE routed entry point — mine mutual-best pairs with the
-    * candidate tier CHOSEN BY CORPUS SIZE, the [[IvfPq.topKAuto]]
-    * stance: one count per side picks brute / IVF, so the caller no
-    * longer hand-selects a tier.
-    *
-    *   - max side ≤ `bruteMax`: [[bruteCandidates]] — the exact tier;
-    *     a broadcast cross product is unbeatable while it fits.
-    *   - above: two √n-ish IVF fits + [[ivfCandidates]] — the
-    *     linear-in-corpus path (fit cost amortizes by ~2 k rows; at
-    *     24 k per side fits + probes run 8× faster than the LSH tier,
-    *     at the r16 30 k point 5.5×).
-    *
-    * There is deliberately NO LSH tier: the r17 sweep (64-dim, 8 cpus,
-    * k = 8, auto bucket sizing vs IVF √n cells / nprobe 4, comparable
-    * mined-pair recall) found no corpus size where the two-way
-    * [[Similarity.lshTopK]] union beat IVF —
-    *
-    *   per side:   1 k    2 k    4 k    6 k    16 k   24 k   30 k(r16)
-    *   LSH  (s):   8.6   14.4   21.8   24.8   177    265    579
-    *   IVF  (s):   3.7    4.4    6.1    8.6    28.3   33.3   106
-    *
-    * LSH's candidate volume is Σ|bucket|² (bucket-population
-    * quadratic) while IVF's is n · nprobe · cellSize (linear at fixed
-    * quantizer granularity), and the two √n-ish IVF fits amortize by
-    * ~2 k rows.
-    *
-    * Exactness: the brute route is exact; IVF pays its usual recall
-    * trade at production settings, and reproduces the brute mining
-    * bit-for-bit under covering settings (`nprobe ≥ nlist` with
-    * `k ≥ corpus` — BitextSpec pins both routes ≡ brute through this
-    * entry point). Same contract as the tiers themselves: disjoint id
-    * spaces, null embeddings drop.
-    *
-    * @param nlist IVF cells per side; 0 (default) sizes to
-    *   clamp(√n, 16, 4096) — the usual quantizer-granularity rule */
-  def bitextMine(src: DataFrame, tgt: DataFrame, k: Int, threshold: Double,
-      bruteMax: Long = DefaultBruteMax,
-      nlist: Int = 0, nprobe: Int = 4, ivfIters: Int = 3): DataFrame = {
-    val n = math.max(src.count(), tgt.count())
-    val pairs =
-      if (n <= bruteMax) bruteCandidates(src, tgt)
-      else {
-        val cells =
-          if (nlist > 0) nlist
-          else math.max(16L, math.min(4096L,
-            math.round(math.sqrt(n.toDouble)))).toInt
-        val srcM = Ivf.fit(src, cells, ivfIters)
-        val tgtM = Ivf.fit(tgt, cells, ivfIters)
-        ivfCandidates(src, tgt, k, srcM, tgtM, nprobe)
-      }
-    mine(pairs, k, threshold)
-  }
-
-  /** The CELL-PARTITIONED candidate tier: each side's IVF top-k
-    * against the other, UNIONED — both directions, because the margin
-    * needs both sides' own neighbourhood lists and mutual-best needs
-    * every pair visible from whichever side ranked it. Each side
-    * probes the OTHER side's quantizer (a query mines targets from the
-    * target index and vice versa); at production scale pass models
-    * loaded from the
-    * two sides' persisted indexes ([[Ivf.loadModel]]) and the probes
-    * ride their cell partitions. With `nprobe = model.nlist` and
-    * `k ≥ |corpus|` this provably reproduces [[bruteCandidates]]-fed
-    * mining bit-for-bit (BitextSpec pins it); production reduces
-    * nprobe/k and pays the usual IVF recall trade.
-    *
-    * CONTRACT: the two corpora's id spaces must be DISJOINT (re-key
-    * one side if needed) — the underlying within-corpus ANN excludes
-    * `id == qid` as a self-match, which here would silently drop the
-    * cross-corpus pair that happens to share a number. */
-  def ivfCandidates(src: DataFrame, tgt: DataFrame, k: Int,
-      srcModel: Ivf.Model, tgtModel: Ivf.Model, nprobe: Int = 4): DataFrame = {
-    val st = Ivf.topK(tgt,
-        src.select(col("id").as("qid"), col("embedding")), tgtModel, k, nprobe)
-      .select(col("qid").as("sid"), col("id").as("tid"), col("cosine"))
-    val ts = Ivf.topK(src,
-        tgt.select(col("id").as("qid"), col("embedding")), srcModel, k, nprobe)
-      .select(col("id").as("sid"), col("qid").as("tid"), col("cosine"))
-    st.unionByName(ts).distinct()
   }
 
   /** Brute-force candidate pairs between two embedded corpora —

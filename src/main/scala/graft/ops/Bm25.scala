@@ -178,11 +178,12 @@ object Bm25 {
     * incremental indexes): re-appending a doc_id would double its
     * postings and its meta contribution.
     *
-    * `batchId` makes a streaming RETRY safe (foreachBatch is
-    * at-least-once up to the checkpoint commit — [[graft.streaming
-    * .EventStreams.bm25IndexStream]] passes its batchId through): an
-    * unstamped replay would re-append the whole batch, doubling tf/df
-    * and the meta totals — silently wrong scores, not a crash. Stamped
+    * `batchId` makes a RETRY safe (a streaming caller's foreachBatch
+    * is at-least-once up to the checkpoint commit and passes its
+    * batchId through; a batch caller retrying a failed append passes
+    * its own): an unstamped replay would re-append the whole batch,
+    * doubling tf/df and the meta totals — silently wrong scores, not a
+    * crash. Stamped
     * appends record batch_id in both meta and postings rows, the meta
     * row carries the batch's EXPECTED posting count (`n_postings`),
     * and the append becomes a RESUME keyed on that count, not mere
@@ -197,14 +198,14 @@ object Bm25 {
     * rewrite the postings in full. An existence-keyed skip would read
     * the partial state as "landed" and permanently lose postings.
     * Every crash point therefore replays to the exact no-crash index
-    * (EventStreamsSpec's kill-between-writes cases + Bm25Spec's
-    * partial-commit case pin it). Steady-state cost per stamped
-    * append: the meta probe — a Spark read + driver filter over a dir
-    * that grows one tiny row-file per batch, so it grows with batch
-    * count until [[compactIndex]] collapses meta to one file (run
-    * compaction on a cadence for the postings' small-file cliff and
-    * the probe stays O(1) too); the postings landed-count scan runs
-    * only on the replay path, where the meta row was found. */
+    * (Bm25Spec's "crash replay: stamped appends converge at every
+    * crash point" and partial-commit cases pin it). Steady-state cost
+    * per stamped append: the meta probe — a Spark read + driver filter
+    * over a dir that grows one tiny row-file per batch, so it grows
+    * with batch count until [[compactIndex]] collapses meta to one
+    * file (run compaction on a cadence for the postings' small-file
+    * cliff and the probe stays O(1) too); the postings landed-count
+    * scan runs only on the replay path, where the meta row was found. */
   def appendIndex(docs: DataFrame, path: String, idCol: String = "doc_id",
       textCol: String = "text", nBuckets: Int = 64,
       batchId: Option[Long] = None): Unit = {
@@ -384,10 +385,9 @@ object Bm25 {
     * REFUSED at runtime when `checkpoint` names the maintaining
     * stream's checkpoint location
     * ([[IndexMaintenance.requireBatchesCommitted]] — the batch's
-    * replay would resurrect them); pass it whenever
-    * [[graft.streaming.EventStreams.bm25IndexStream]] (or any stream)
-    * maintains this index. Without it the race remains the caller's
-    * contract, as before.
+    * replay would resurrect them; TakedownGuardSpec pins it); pass it
+    * whenever a stream maintains this index. Without it the race
+    * remains the caller's contract, as before.
     *
     * Torn visibility between the steps (delta landed, strip not yet):
     * scores are briefly perturbed (N too low) but the strip completes
@@ -485,11 +485,10 @@ object Bm25 {
   /** Compact the persisted index in place: collapse each bucket
     * directory to ONE parquet file and `meta/` to one summed row.
     * [[appendIndex]] writes one file per bucket per append — at
-    * streaming cadence ([[graft.streaming.EventStreams.bm25IndexStream]])
-    * that is the classic small-file cliff: a year of 5-minute triggers
-    * is ~10⁵ files per bucket, and every query pays the listing + open
-    * cost. Run this on whatever cadence keeps per-bucket file counts
-    * O(1) (the `Warehouse.compact` stance).
+    * streaming cadence that is the classic small-file cliff: a year of
+    * 5-minute triggers is ~10⁵ files per bucket, and every query pays
+    * the listing + open cost. Run this on whatever cadence keeps
+    * per-bucket file counts O(1) (the `Warehouse.compact` stance).
     *
     * No merge logic is needed: appends are doc-disjoint by contract,
     * so the compacted postings are a pure re-layout (same rows, fewer

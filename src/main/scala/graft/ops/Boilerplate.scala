@@ -96,20 +96,6 @@ object Boilerplate {
     applySet(src, idCol, grpCol, idxCol, lineCol, boiler, broadcastSet)
   }
 
-  /** Strip `lines` against an EXPLICIT, already-derived boilerplate set
-    * ((grpCol, line_md5) — a [[boilerplateSet]] /
-    * [[boilerplateSetFromStats]] output): the building block for
-    * callers that reuse one set across many batches — the streaming
-    * twin ([[graft.streaming.EventStreams.boilerplateStripStream]])
-    * derives the set ONCE at wiring time instead of re-aggregating the
-    * persisted stats every micro-batch. */
-  def stripLinesWithSet(lines: DataFrame, idCol: String, grpCol: String,
-      idxCol: String, lineCol: String, boiler: DataFrame,
-      broadcastSet: Boolean = true): DataFrame = {
-    Reserved.requireAbsent("stripLinesWithSet", Seq("line_md5", "__n_grp"), lines)
-    applySet(lines, idCol, grpCol, idxCol, lineCol, boiler, broadcastSet)
-  }
-
   /** Shared removal + reassembly: anti-join the (grpCol, line_md5) set
     * away, rebuild survivors in original order, keep EVERY doc.
     * `broadcastSet` is an honesty knob, not an optimizer guess: the set

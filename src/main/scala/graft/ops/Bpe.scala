@@ -264,29 +264,7 @@ object Bpe {
         posexplode(col("subwords")).as(Seq("sub_pos", "subword")))
   }
 
-  // ---- trainer artifacts: persisted merges, id vocabulary ----
-
-  /** Persist a learned merge table under `path` (parquet (rank, left,
-    * right), zstd) — the trainer artifact, reloadable across sessions
-    * like the dedup band index or the IVF centroids. One small file:
-    * merge tables are ≤ ~10⁵ rows by construction. */
-  def saveMerges(spark: SparkSession, merges: Seq[(String, String)],
-      path: String, mode: SaveMode = SaveMode.ErrorIfExists): Unit = {
-    import spark.implicits._
-    merges.zipWithIndex.map { case ((a, b), r) => (r, a, b) }
-      .toDF("rank", "left", "right")
-      .coalesce(1).write.mode(mode).option("compression", "zstd").parquet(path)
-  }
-
-  /** Reload a persisted merge table in rank order. The collect is
-    * bounded by the merge count (vocabulary-scale) — the same bounded
-    * stance as [[collectWordFreqs]], no guard needed because the
-    * artifact was written size-bounded by [[saveMerges]]'s caller. */
-  def loadMerges(spark: SparkSession, path: String): Seq[(String, String)] =
-    spark.read.schema("rank INT, left STRING, right STRING") // writer-fixed
-      .parquet(path).orderBy("rank")
-      .select("left", "right")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+  // ---- trainer artifact: the id vocabulary ----
 
   /** The token-id vocabulary a trainer hands to the model: base symbols
     * (every code-point symbol that appears in the training vocabulary's

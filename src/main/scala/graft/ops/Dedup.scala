@@ -116,7 +116,8 @@ object Dedup {
     * the ordering was built to prevent. Stamped appends record
     * (fingerprint, batch_id) and the anti-join EXCLUDES rows of the
     * replaying batch's own id, so every crash point replays to the
-    * bit-identical output (IncrementalDedupSpec simulates all three).
+    * bit-identical output (DedupSpec's paragraphDedupIncrement
+    * crash-replay case pins it).
     * Fingerprints re-appended by a replay carry the same batch_id —
     * exact duplicates, collapsed by `compactDir(dedupeRows = true)`.
     *
@@ -187,34 +188,12 @@ object Dedup {
   def hashedShingles(text: Column, n: Int = 3): Column =
     graft.expr.HashedShingles.hashedShingles(TextOps.tokens(lower(text)), n)
 
-  /** k-permutation MinHash signature over hashed shingles — one
-    * codegen'd pass ([[graft.expr.MinHash64]]). Empty shingle arrays
-    * yield Long.MaxValue slots (callers filter empty docs anyway). */
-  def minhashSignature(hashCol: Column, k: Int = 16): Column =
-    graft.expr.MinHash64.minhash64(hashCol, k)
-
-  /** LSH band keys: hash of each r-row slice of the signature.
-    * bands × r must equal the signature length. NOTE: composing this
-    * with [[minhashSignature]] through a projection invites Catalyst's
-    * project-collapse to inline the signature into every band
-    * expression (bands× recompute per row) — prefer [[minhashBands]],
-    * which fuses both into one pass. */
-  def lshBands(sig: Column, bands: Int, r: Int): Column =
-    array((0 until bands).map(b => xxhash64(lit(b), concat_ws(",", slice(sig, b * r + 1, r)))): _*)
-
   /** Signature + band keys fused in one codegen'd pass
     * ([[graft.expr.MinHashBands]]) — immune to project-collapse
     * signature re-inlining; the per-row cost is k×|shingles| + bands×r
     * no matter how the plan rewrites. */
   def minhashBands(hashCol: Column, k: Int = 16, bands: Int = 4): Column =
     graft.expr.MinHashBands.minhashBands(hashCol, k, bands)
-
-  /** Candidate near-duplicate pairs (id1 < id2) via MinHash LSH:
-    * explode band keys, self-join per bucket. `df` must have an `id`
-    * column and a `text` column. */
-  def minhashCandidates(df: DataFrame, n: Int = 3, k: Int = 16, bands: Int = 4): DataFrame =
-    minhashCandidatesFromShingles(
-      df.select(col("id"), hashedShingles(col("text"), n).as("sh")), k, bands)
 
   /** Candidates from a precomputed (id, hashed-shingles) frame. The
     * band frame is persisted while the bucket self-join runs (Catalyst's
@@ -237,39 +216,6 @@ object Dedup {
         .distinct()
         .localCheckpoint(true)
     } finally sig.unpersist(blocking = false)
-  }
-
-  /** LSH band configuration scaled to corpus size — returns
-    * (k = signature length, bands).
-    *
-    * A FIXED (rows-per-band r, bands b) has a size-invariant per-PAIR
-    * collision probability, so false-candidate count grows ∝ n² while
-    * true pairs grow ∝ n: measured at the soak, k=48/b=16 (r=3) went
-    * from 17.1 M candidates / 41 k true pairs at 800 k docs to 68.4 M /
-    * 82 k at 1.6 M — candidate precision 0.12 % and the candidate stage
-    * time-dominant. Standard LSH remedy (Leskovec/Rajaraman/Ullman,
-    * "Mining of Massive Datasets" ch.3): grow r with log n so the
-    * background collision rate falls as the pair count rises, then pick
-    * the smallest b keeping analytic recall at `threshold` above
-    * `minRecall` (recall = 1 − (1 − t^r)^b). Per-doc signature cost
-    * grows only ∝ r·b; candidate noise falls geometrically in r.
-    */
-  def autoBands(n: Long, threshold: Double, minRecall: Double = 0.95): (Int, Int) = {
-    require(threshold > 0 && threshold < 1, s"threshold must be in (0,1), got $threshold")
-    require(minRecall > 0 && minRecall < 1, s"minRecall must be in (0,1), got $minRecall")
-    val r = math.max(3, math.ceil(math.log10(math.max(10L, n).toDouble)).toInt)
-    val bL = math.max(1L, math.ceil(
-      math.log(1 - minRecall) / math.log(1 - math.pow(threshold, r))).toLong)
-    // guard the output like autoBits guards its range: far below the
-    // banding S-curve (low threshold × large n) the recall floor would
-    // demand an absurd band count — and r*b would overflow Int before
-    // any downstream require could say why
-    require(bL <= 256L,
-      s"autoBands: threshold=$threshold at n=$n needs $bL bands for " +
-        s"recall >= $minRecall — banding is impractical this far below " +
-        "the S-curve; raise the threshold or pick (k, bands) explicitly")
-    val b = bL.toInt
-    (r * b, b)
   }
 
   /** Load-time covering assertion for a banded near-dup result (the
@@ -305,19 +251,7 @@ object Dedup {
       f"$context: band config (r=$r, bands=$bands) no longer covers at " +
         f"this corpus size — ${row.getLong(1)} verified pairs imply " +
         f"expected missed pairs $expectedMissed%.2e > budget $budget%.0e; " +
-        "raise bands (k = r·bands) or derive them via autoBands")
-  }
-
-  /** [[minhashNearDups]] with the band configuration auto-scaled to the
-    * corpus size via [[autoBands]]. The count that decides is a full
-    * pass over `df` — cheap for a parquet scan (footer counts), but a
-    * re-execution of the whole upstream plan when `df` is a computed
-    * pipeline: materialize such a frame first. Gate queries pin
-    * explicit configs so their oracles stay deterministic. */
-  def minhashNearDupsAuto(df: DataFrame, threshold: Double, n: Int = 3,
-      minRecall: Double = 0.95): DataFrame = {
-    val (k, bands) = autoBands(df.count(), threshold, minRecall)
-    minhashNearDups(df, threshold, n, k, bands)
+        "raise bands (k = r·bands)")
   }
 
   /** Exact Jaccard similarity between two docs' shingle arrays
@@ -485,9 +419,9 @@ object Dedup {
     * The (n, k, bands) configuration is part of the INDEX IDENTITY:
     * band keys are only comparable under the same shingle width and
     * banding, so every increment (and every probe) must pass the values
-    * the index was built with — in particular, do NOT size them with
-    * [[autoBands]] per batch, whose output changes as the corpus grows.
-    * Pick the config for the corpus's TARGET size once, at build time.
+    * the index was built with — never a per-batch size-derived config,
+    * which changes as the corpus grows. Pick the config for the
+    * corpus's TARGET size once, at build time.
     *
     * This is the daily-increment topology at 100 TB: the corpus is
     * indexed once, each new batch joins its own band keys against the

@@ -214,40 +214,6 @@ object Dsir {
     }
   }
 
-  /** Materialize a weight table as a dense `buckets`-length array —
-    * driver-side but BOUNDED by B, never by corpus size (the same
-    * bounded-collect stance as IVF centroids / PQ codebooks). Missing
-    * buckets get the neutral weight 10⁶. Feed to [[scoreRowLocal]]. */
-  def weightsArray(weights: DataFrame, buckets: Int): Array[Long] = {
-    val arr = Array.fill(buckets)(1000000L)
-    weights.collect().foreach { r =>
-      arr(r.getAs[Long]("bkt").toInt) = r.getAs[Long]("w")
-    }
-    arr
-  }
-
-  /** Row-local scoring against a LITERAL weight array: terms, buckets,
-    * lookup, and sum all happen inside one projection — no join, no
-    * shuffle, no aggregation state. This is the STREAMING form (legal
-    * in append mode on an unbounded doc stream, state stays zero) and
-    * the cheapest batch form once weights are learned; output matches
-    * [[scoreDocs]] row-for-row (DsirSpec-pinned, batch and stream).
-    * The literal costs 8·B bytes in the plan (32 KB at B = 4096 — the
-    * LshKeys plane-tensor precedent). */
-  def scoreRowLocal(docs: DataFrame, idCol: String, textCol: String,
-      wArr: Array[Long], portable: Boolean = true, n: Int = 2): DataFrame = {
-    val buckets = wArr.length
-    docs.select(col(idCol), TextOps.tokens(lower(col(textCol))).as("toks"))
-      .select(col(idCol), termsOf(col("toks"), n).as("terms"))
-      .select(col(idCol),
-        aggregate(
-          transform(col("terms"), t =>
-            element_at(typedlit(wArr),
-              (bucketOf(t, buckets, portable) + 1L).cast("int"))),
-          lit(0L), (acc, x) => acc + x).as("score"),
-        size(col("terms")).cast("long").as("n_terms"))
-  }
-
   /** Deterministic top-k selection by (score desc, id): the "resample
     * the best slice" step. A global top-k via row_number over an
     * unpartitioned window would single-reduce at scale; Spark's

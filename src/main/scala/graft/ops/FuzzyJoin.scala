@@ -191,7 +191,7 @@ object FuzzyJoin {
 
   /** (id, str, __len, __gs grams, __n gram count, __gh hashed gram
     * set, __short flag) — the shared front of both join shapes. */
-  private def baseOf(rows: DataFrame, maxDist: Int, q: Int): DataFrame =
+  private[ops] def baseOf(rows: DataFrame, maxDist: Int, q: Int): DataFrame =
     rows.where(col("str").isNotNull)
       .select(col("id"), col("str"), length(col("str")).as("__len"),
         gramsOf(col("str"), q).as("__gs"))
@@ -329,22 +329,6 @@ object FuzzyJoin {
     }
   }
 
-  /** The DEDUPED candidate-pair set [[selfJoin]]'s filter chain admits
-    * — exposed for cost accounting: the chain's honest cost is the
-    * candidate volume (Σ|gram-group|² over signature grams on
-    * low-entropy corpora), and capacity planning wants
-    * candidates-vs-verified ratios without paying the levenshtein
-    * pass. NOTE the distinct here is the diagnostic's own cost —
-    * [[selfJoin]] itself never dedups the explosion (see
-    * [[verified]]), so this can cost MORE than the join it measures. */
-  def selfCandidates(rows: DataFrame, maxDist: Int, q: Int = 2): DataFrame = {
-    require(maxDist >= 0, "fuzzyJoin: maxDist must be ≥ 0")
-    require(q >= 1, "fuzzyJoin: q must be ≥ 1")
-    Reserved.requireAbsent("fuzzyJoin",
-      Seq("__gs", "__g", "__df", "__rk", "__len", "__short", "__n", "__gh", "__p"), rows)
-    selfCandidatesFromBase(baseOf(rows, maxDist, q), maxDist, q).distinct()
-  }
-
   /** The explicit-N gram-key spread in front of the candidate join.
     *
     * LOAD-BEARING AT SCALE (found by the 30× soak): the signature
@@ -363,7 +347,7 @@ object FuzzyJoin {
     sig.repartition(sig.sparkSession.sessionState.conf.numShufflePartitions,
       col("__g"))
 
-  private def selfCandidatesFromBase(base: DataFrame, maxDist: Int, q: Int,
+  private[ops] def selfCandidatesFromBase(base: DataFrame, maxDist: Int, q: Int,
       dfT0: Option[DataFrame] = None): DataFrame = {
     val sigLen = maxDist * q + 1
     // global gram rarity (df = strings containing the gram), the
@@ -507,16 +491,4 @@ object FuzzyJoin {
       .where(col("__rk") <= k)
       .drop("__rk")
   }
-
-  /** Match-COUNT-only mode: one row per MATCHED probe — (id1,
-    * n_matches) — the other scale-safe answer shape for pathological
-    * adjacency (audit "how dirty is this feed" without materializing
-    * the quadratic match list anywhere past the aggregate's partial
-    * counts). Probes with zero matches do not appear (count them by
-    * left-anti against `left` if needed — their absence IS the
-    * answer). */
-  def joinCounts(left: DataFrame, right: DataFrame, maxDist: Int,
-      q: Int = 2, fuseCap: Int = DefaultFuseCap): DataFrame =
-    join(left, right, maxDist, q, fuseCap)
-      .groupBy("id1").agg(count(lit(1)).as("n_matches"))
 }

@@ -284,28 +284,6 @@ object IndexMaintenance {
     (logLanded, fullyLanded)
   }
 
-  /** Parquet data-file count under `dir`, recursive — the LAYOUT-DEBT
-    * probe behind the streaming maintainers' `compactOverFiles`
-    * trigger (the [[graft.Warehouse]] optimize stance ported to index
-    * dirs: compact when the measured file count diverges, not on a
-    * batch-count schedule — batches are a bad proxy because one
-    * append's file spread varies with touched buckets/cells, so
-    * "every n batches" over- or under-compacts by exactly that
-    * factor). One recursive listing per call: free on local/HDFS,
-    * a metadata round-trip on object stores — opt-in for that reason.
-    * Missing dir → 0. */
-  def parquetFileCount(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return 0L
-    var n = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-    }
-    n
-  }
-
   /** Streaming-takedown safety guard: REFUSE (loudly) to run a
     * takedown while the maintaining stream's checkpoint shows work in
     * flight — the runtime form of the contract that was previously

@@ -312,9 +312,9 @@ object Ivf {
     * usual vector-db rule of thumb). Appends also accumulate one file
     * per (batch × cell) — [[compactIndex]] restores one file per cell.
     *
-    * `batchId` makes a streaming RETRY safe (the [[Bm25.appendIndex]]
-    * protocol, for [[graft.streaming.EventStreams.annIndexStream]]):
-    * an unstamped replay would re-append the whole batch and top-k
+    * `batchId` makes a RETRY safe (the [[Bm25.appendIndex]] protocol;
+    * IvfSpec's crash-replay and partial-commit cases pin it): an
+    * unstamped replay would re-append the whole batch and top-k
     * results would carry DUPLICATE candidate rows until a dedupe
     * compaction. Stamped appends write an `appendlog/` row FIRST
     * (one tiny row per batch — the cheap existence probe, carrying the

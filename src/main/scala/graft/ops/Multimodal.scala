@@ -174,16 +174,4 @@ object Multimodal {
       .withColumn("frame_offset",
         explode(sequence(lit(0L), greatest(col("byte_len").cast("long") - 1, lit(0L)), lit(stride.toLong))))
       .select(col("media_id"), col("frame_offset"))
-
-  /** Wrap a text-keyed table into a media table (test/bench helper:
-    * payloads are the utf-8 bytes — stands in for real blobs). */
-  def mediaFromText(spark: SparkSession, df: DataFrame,
-      idCol: String, textCol: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    df.select(
-      col(idCol).cast("long").as("media_id"),
-      when(col(idCol) % 3 === 0, "image")
-        .when(col(idCol) % 3 === 1, "audio").otherwise(lit("video")).as("kind"),
-      encode(col(textCol), "UTF-8").as("payload")).as[MediaRow]
-  }
 }

@@ -150,18 +150,6 @@ object Packing {
         min(col(orderCol)).as("first_doc"),
         max(col(orderCol)).as("last_doc"))
 
-  /** The naive single-partition global window — the semantics oracle
-    * for [[assignWindows]] (PackingSpec pins equality). Never use at
-    * scale: `Window.orderBy` without partitioning is one reducer. */
-  private[graft] def assignWindowsNaive(docs: DataFrame, orderCol: String,
-      tokCol: String, budget: Long): DataFrame = {
-    val w = Window.orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    docs
-      .withColumn("tokens_before", coalesce(sum(col(tokCol)).over(w), lit(0L)))
-      .withColumn("window_id", floor(col("tokens_before") / budget))
-  }
-
   final case class PackedSample(shard: Int, doc_id: Long, n_tok: Long, bin: Long)
 
   /** SAMPLE-level packing — the SFT-style complement of the

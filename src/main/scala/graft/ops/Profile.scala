@@ -48,100 +48,4 @@ object Profile {
         col("m.n_distinct"), col("m.min_val"), col("m.max_val"))
       .orderBy("col_name")
   }
-
-  // ---- persisted, appendable profile ------------------------------------
-
-  /** Fold one batch's statistics into a persisted profile at `path` —
-    * the incremental form for a GROWING lake, where re-scanning the
-    * whole table per batch is the thing to avoid. Every stored stat is
-    * MERGEABLE: row/null counts sum, typed min/max re-aggregate, and
-    * distinct counts ride as DataSketches HLL sketches (union of
-    * sketches ≡ the sketch of the union — the merged estimate is
-    * IDENTICAL to a one-shot build's, not merely close; ProfileSpec
-    * pins it). The persisted layout is one WIDE row per append with
-    * TYPED min/max columns — a long-form string layout would merge
-    * numeric mins lexicographically ("10" < "9"). Batches must
-    * partition the table (the index-family contract): re-appending
-    * rows double-counts n/nulls.
-    *
-    * `batchId` makes a RETRIED append idempotent: counter rows are
-    * additive, so an at-least-once caller (foreachBatch replays the
-    * in-flight batch after a crash between this write and its
-    * checkpoint commit) would otherwise double-count n_rows/n_nulls
-    * permanently. Stamped rows dedup by batch_id in [[readProfile]] —
-    * safe because a replay recomputes the SAME stats from the same
-    * batch data. Unstamped (`None`, the one-shot batch API) rows are
-    * never deduped against each other.
-    *
-    * CONTRACT (single stream, single checkpoint per stats path): the
-    * batch_id dedup assumes every stamped row at `path` comes from ONE
-    * streaming query with ONE checkpoint lineage, where equal
-    * batch_ids imply identical batches. Two different streams writing
-    * the same stats path, or one stream RESTARTED WITH A FRESH
-    * CHECKPOINT (batch ids restart at 0), produce distinct batches
-    * with equal batch_id that [[readProfile]] would silently collapse
-    * as replays — undercounting n_rows/nulls. Give each stream (and
-    * each checkpoint lineage) its own stats path; profiles merge
-    * downstream by summing the [[readProfile]] outputs if one view is
-    * needed. */
-  def appendStats(df: DataFrame, path: String, cols: Seq[String],
-      batchId: Option[Long] = None): Unit = {
-    require(cols.nonEmpty, "no columns to profile")
-    val missing = cols.filterNot(df.columns.contains)
-    require(missing.isEmpty, s"appendStats: no such column(s): ${missing.mkString(", ")}")
-    IndexMaintenance.guardAppend(df.sparkSession, path)
-    df.agg(count(lit(1)).as("n_rows"),
-        cols.flatMap { c =>
-          Seq(
-            sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"),
-            min(col(c)).as(s"${c}__min"),
-            max(col(c)).as(s"${c}__max"),
-            hll_sketch_agg(col(c).cast("string")).as(s"${c}__hll"))
-        }: _*)
-      .withColumn("batch_id",
-        batchId.map(lit(_)).getOrElse(lit(null)).cast("long"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
-  }
-
-  /** Merge every appended batch row into the [[profile]]-shaped report
-    * (distinct counts as `ndv_est` — the HLL estimate, since an exact
-    * count is unmergeable without re-reading the data). The profiled
-    * column set derives from the stored schema, so readers need no
-    * out-of-band column list. */
-  def readProfile(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    // mergeSchema: profiles written before the batch_id stamp mix with
-    // stamped rows in one dir; the files are one-row-tiny so the
-    // footer-merge cost is nil
-    val raw0 = spark.read.option("mergeSchema", "true").parquet(path)
-    // replay shield: batchId-stamped rows (streaming appends) dedup by
-    // batch_id — a replayed foreachBatch wrote an identical second row;
-    // unstamped rows (batch API, batch_id null) all count
-    val raw =
-      if (raw0.columns.contains("batch_id"))
-        raw0.where(col("batch_id").isNotNull).dropDuplicates("batch_id")
-          .unionByName(raw0.where(col("batch_id").isNull))
-      else raw0
-    val cols = raw.columns.filter(_.endsWith("__nulls"))
-      .map(_.stripSuffix("__nulls")).toSeq.sorted
-    require(cols.nonEmpty, s"no profile stats at $path")
-    val merged = raw.agg(sum(col("n_rows")).as("n_rows"),
-      cols.flatMap { c =>
-        Seq(
-          sum(col(s"${c}__nulls")).as(s"${c}__nulls"),
-          min(col(s"${c}__min")).as(s"${c}__min"),
-          max(col(s"${c}__max")).as(s"${c}__max"),
-          hll_union_agg(col(s"${c}__hll")).as(s"${c}__hll"))
-      }: _*)
-    val rows = cols.map(c => struct(
-      lit(c).as("col_name"),
-      col(s"${c}__nulls").as("n_nulls"),
-      hll_sketch_estimate(col(s"${c}__hll")).as("ndv_est"),
-      col(s"${c}__min").cast("string").as("min_val"),
-      col(s"${c}__max").cast("string").as("max_val")))
-    merged
-      .select(col("n_rows"), explode(array(rows: _*)).as("m"))
-      .select(col("m.col_name"), col("n_rows"), col("m.n_nulls"),
-        col("m.ndv_est"), col("m.min_val"), col("m.max_val"))
-      .orderBy("col_name")
-  }
 }

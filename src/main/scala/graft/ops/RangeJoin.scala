@@ -183,10 +183,7 @@ object RangeJoin {
   }
 
   /** The bucket width [[rangeJoin]]'s auto path would pick for this
-    * interval table: the max interval length (≥ 1). Exposed so a
-    * STREAM caller can resolve the width ONCE at setup instead of
-    * re-aggregating the static interval side every micro-batch
-    * ([[graft.streaming.EventStreams.rangeAttachStream]]). */
+    * interval table: the max interval length (≥ 1). */
   def autoWidth(intervals: DataFrame, startCol: String, endCol: String): Long =
     maxLenWidth(intervals
       .select((asLong(intervals, endCol) - asLong(intervals, startCol)).as("d"))
@@ -194,9 +191,7 @@ object RangeJoin {
 
   /** The single definition of "the width the auto path picks": the max
     * of a `d` lengths column, floored at 1 (shared by [[autoWidth]] and
-    * [[rangeJoinIntervals]] so the two can never drift —
-    * [[graft.streaming.EventStreams.rangeAttachStream]] depends on the
-    * equivalence). */
+    * [[rangeJoinIntervals]] so the two can never drift). */
   private def maxLenWidth(lengths: DataFrame): Long = {
     val m = lengths.agg(max(col("d"))).head()
     if (m.isNullAt(0)) 1L else math.max(m.getLong(0), 1L)

@@ -27,12 +27,6 @@ object Sampling {
     (conv(substring(md5(coalesce(key.cast("string"), lit(""))), 1, 8), 16, 10)
       .cast("long") % 1000).cast("int")
 
-  /** Keep ~`permille`/1000 of rows, deterministically by content. */
-  def hashSample(df: DataFrame, key: Column, permille: Int): DataFrame = {
-    require(permille >= 0 && permille <= 1000, "permille in [0,1000]")
-    df.where(permilleBucket(key) < permille)
-  }
-
   /** Stratified deterministic sample: per-stratum keep rates
     * (permille). Strata absent from `rates` keep `defaultPermille`.
     * The rate lookup is a when-chain over a bounded, library-author-

@@ -109,121 +109,4 @@ object SemDedup {
   def semDedup(corpus: DataFrame, centroids: DataFrame,
       threshold: Double): DataFrame =
     prune(assignByCosine(corpus, centroids), threshold)
-
-  /** Incremental SemDeDup against a persisted SEEN-vector index — the
-    * dedup-on-ingest form ([[graft.streaming.EventStreams
-    * .semDedupStream]] wires it per micro-batch): arriving vectors
-    * assign to the FROZEN `centroids`, and a row is removed when a
-    * same-cluster vector at cosine ≥ `threshold` exists either in ANY
-    * earlier batch or at a LOWER id within its own batch. For
-    * id-ascending arrival this is EXACTLY the batch [[semDedup]] over
-    * the union (the batch removal rule "some lower-id cluster mate,
-    * kept or not, is τ-close" decomposes by batch precisely when
-    * earlier-batch ⇒ lower-id; EventStreamsSpec pins the equivalence) —
-    * which is also why the index stores EVERY seen vector, not just
-    * survivors: the batch rule's witness set is all rows.
-    *
-    * Crash ordering follows [[Dedup.paragraphDedupIncrement]]: output
-    * materializes BEFORE the index append (a retry re-emits, never
-    * self-strips), and the `batchId` stamp excludes the replaying
-    * batch's own rows from "seen", closing the crash-after-both-writes
-    * window. Replay-duplicated index rows are exact duplicates —
-    * [[IndexMaintenance.compactDir]] with `dedupeRows = true` collapses
-    * them on whatever cadence the stream chooses.
-    *
-    * Scale: one shuffle on the cluster key per batch (the [[prune]]
-    * topology, incrementalized); the candidate join is |batch| ×
-    * |cluster members|, bounded by the clustering granularity exactly
-    * like the batch pass. The index grows ∝ corpus — it IS the corpus
-    * in embedding space, cluster-keyed.
-    *
-    * @param newRows (`id`, `embedding`, carry cols) — id-disjoint from
-    *   every earlier batch (the index-family contract)
-    * @return the batch's surviving rows (assignByCosine columns) */
-  def semDedupIncrement(newRows: DataFrame, centroids: DataFrame,
-      threshold: Double, indexPath: String,
-      batchId: Option[Long] = None): DataFrame = {
-    val spark = newRows.sparkSession
-    Reserved.requireAbsent("semdedup.increment",
-      Seq("__c", "__id1", "__id2", "__v1", "__v2", "__rm", "__sv"), newRows)
-    val assigned = assignByCosine(newRows, centroids)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idxDir = new org.apache.hadoop.fs.Path(s"$indexPath/vectors")
-    // restore a dir lost by an interrupted compaction BEFORE the
-    // existence probe: degrading to "no index yet" would both skip the
-    // cross-batch prune (wrong output) and re-create the seen set with
-    // only this batch (permanent loss at the next rewrite)
-    IndexMaintenance.guardAppend(spark, idxDir.toString)
-    val haveIndex = idxDir.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(idxDir)
-
-    val side = assigned.select(col("cluster").as("__c"), col("id"),
-      asDouble(col("embedding")).as("__v1"))
-    // within-batch rule: a lower-id τ-close batch mate removes the row
-    val withinRm = side
-      .join(side.select(col("__c"), col("id").as("__id2"),
-        col("__v1").as("__v2")), "__c")
-      .where(col("id") < col("__id2"))
-      .where(Similarity.cosine(col("__v1"), col("__v2")) >= threshold)
-      .select(col("__id2").as("__rm"))
-    // cross-batch rule: ANY earlier-batch τ-close cluster mate removes
-    // it (earlier batches always win — keep-first, id-blind)
-    val seenRm =
-      if (!haveIndex) withinRm.limit(0)
-      else {
-        val idx0 = IndexMaintenance.readStamped(spark, idxDir.toString)
-        val seen = batchId match {
-          case Some(b) if idx0.columns.contains("batch_id") =>
-            idx0.where(col("batch_id").isNull || col("batch_id") =!= b)
-          case _ => idx0
-        }
-        side.join(seen.select(col("cluster").as("__c"), col("vec").as("__sv")), "__c")
-          .where(Similarity.cosine(col("__v1"), col("__sv")) >= threshold)
-          .select(col("id").as("__rm"))
-      }
-    val removed = withinRm.unionByName(seenRm).distinct()
-    val out = assigned.join(removed, col("id") === col("__rm"), "left_anti")
-      .localCheckpoint(true) // output BEFORE the append — see scaladoc
-    assigned
-      .select(col("id"), asDouble(col("embedding")).as("vec"), col("cluster"))
-      .withColumn("batch_id",
-        batchId.map(lit(_)).getOrElse(lit(null)).cast("long"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(idxDir.toString)
-    assigned.unpersist(blocking = false)
-    out
-  }
-
-  /** DELETE/takedown propagation for the seen-vector index — the
-    * inverse lifecycle verb to [[semDedupIncrement]]'s append: strip
-    * the ids' rows from `vectors/` ([[IndexMaintenance
-    * .rewriteExcludingKeys]] — staged swap, doubling as a re-layout
-    * compaction; replay-duplicated rows still need the usual
-    * `compactDir(dedupeRows = true)` cadence). A removed vector stops
-    * pruning future batches: the
-    * stripped index is row-identical to one accumulated over the
-    * surviving batches only (SemDedupSpec pins increment equality),
-    * which is the right takedown semantics — an erased document's
-    * embedding must not keep suppressing near-duplicates it can no
-    * longer be compared against. Naturally idempotent; unknown ids
-    * are no-ops. Removing ids of a batch whose streaming checkpoint
-    * hasn't committed is REFUSED at runtime when `checkpoint` names
-    * the maintaining stream's checkpoint
-    * ([[IndexMaintenance.requireBatchesCommitted]] — quiescence plus
-    * the stamped cross-check, the vectors are batch-stamped); without
-    * it the race stays the caller's contract (the index-family rule). */
-  def removeSeen(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, ids: DataFrame,
-      checkpoint: Option[String] = None): Unit = {
-    checkpoint.foreach { cp =>
-      // heal a torn compaction swap BEFORE the guard's read — the
-      // strip below would heal it anyway, but the guard reads first
-      IndexMaintenance.guardAppend(spark, s"$indexPath/vectors")
-      val affected = IndexMaintenance.readStamped(spark, s"$indexPath/vectors")
-        .join(ids.select(col("id")), Seq("id"), "left_semi")
-      IndexMaintenance.requireBatchesCommitted(spark, affected, cp,
-        s"SemDedup.removeSeen($indexPath)")
-    }
-    IndexMaintenance.rewriteExcludingKeys(spark, s"$indexPath/vectors",
-      ids.select(col("id")), "id")
-  }
 }

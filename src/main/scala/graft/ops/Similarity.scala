@@ -52,8 +52,9 @@ object Similarity {
 
   /** Deterministic pseudo-random hyperplane component in [-1, 1],
     * derived from xxhash64-chained (table, bit, dim) — no training
-    * step, reproducible across runs and machines. */
-  private def planeComponent(table: Int, bit: Int, dim: Int): Double = {
+    * step, reproducible across runs and machines. Package-visible for
+    * the per-table reference composition in test sources. */
+  private[ops] def planeComponent(table: Int, bit: Int, dim: Int): Double = {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     var h = XXH64.hashLong(table.toLong, 42L)
     h = XXH64.hashLong(bit.toLong, h)
@@ -61,35 +62,16 @@ object Similarity {
     java.lang.Math.floorMod(h, 2001L).toDouble / 1000.0 - 1.0
   }
 
-  /** Test hook: the plane derivation, so specs can rebuild the exact
-    * tensor [[lshKeys]] feeds the fused expression. */
-  private[ops] def planeComponentForTest(table: Int, bit: Int, dim: Int): Double =
-    planeComponent(table, bit, dim)
-
-  /** Random-hyperplane LSH bucket key for one hash table: `nBits` sign
-    * bits of codegen'd dot products against literal hyperplanes.
-    * `nBits = 0` is the degenerate-but-legal 2⁰ = 1 bucket per table —
-    * full coverage, which makes any LSH pipeline built on it provably
-    * exact (every pair collides) while the bucketing machinery still
-    * executes. */
-  def lshKey(vec: Column, nBits: Int, table: Int, dim: Int): Column = {
-    if (nBits == 0) return lit(0L)
-    val bits = (0 until nBits).map { b =>
-      val plane = Array.tabulate(dim)(i => planeComponent(table, b, i))
-      when(dot(vec, typedlit(plane)) >= 0, shiftleft(lit(1L), b)).otherwise(0L)
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** All (table, bucket) keys for a vector — multi-table LSH raises
     * recall (a candidate only needs to collide in ONE table). One fused
     * compiled pass over a literal plane tensor
-    * ([[graft.expr.LshKeys]]): the per-table column composition
-    * ([[lshKey]]) is identical semantics but nTables × nBits separate
-    * dot-product nodes — measured ~40 s per 100 k-vector keying pass in
-    * the r5 soak, paid per self-join branch (pinned equal to the
-    * composition in SimilaritySpec). nBits = 0 falls out naturally:
-    * zero planes per table → every bucket 0 (full coverage). */
+    * ([[graft.expr.LshKeys]]): the per-table column composition (one
+    * or-reduced sign-bit column per table) is identical semantics but
+    * nTables × nBits separate dot-product nodes — measured ~40 s per
+    * 100 k-vector keying pass in the r5 soak, paid per self-join
+    * branch (pinned equal to the composition in SimilaritySpec).
+    * nBits = 0 falls out naturally: zero planes per table → every
+    * bucket 0 (full coverage). */
   private def lshKeys(vec: Column, nBits: Int, nTables: Int, dim: Int): Column =
     graft.expr.LshKeys.lshKeys(vec,
       Array.tabulate(nTables, nBits, dim)((t, b, d) => planeComponent(t, b, d)))
@@ -159,25 +141,6 @@ object Similarity {
       .select("id1", "id2", "cosine")
   }
 
-  /** Distinct candidate pairs (id1 < id2) from LSH bucket collisions —
-    * the candidate stage of [[cosineNearDupsBucketed]] exposed on its
-    * own so soak runs can report candidate counts next to verified-pair
-    * counts (candidate growth ∝ true pairs, not n², is THE scaling
-    * property to watch; same probe exists for MinHash as
-    * [[Dedup.minhashCandidates]]). */
-  def cosineCandidatesBucketed(corpus: DataFrame, nBits: Int = -1,
-      nTables: Int = 8, maxBucket: Int = 0): DataFrame = {
-    corpusProbe(corpus) match {
-      case (_, None) =>
-        corpus.select(col("id").as("id1"), col("id").as("id2")).limit(0)
-      case (n, Some(dim)) =>
-        enforceEnvelope(strictEnvelope(corpus.sparkSession), nBits, n, maxBucket)
-        bucketCandidates(
-          corpus.select(col("id"), asDouble(col("embedding")).as("vec")),
-          autoBits(nBits, n), nTables, dim, maxBucket)
-    }
-  }
-
   /** One probe pass shared by the bucketed paths: row count + embedding
     * dim. Dim is None when the corpus is empty OR the embedding column
     * holds no non-null value — both mean "nothing to bucket" and the
@@ -195,9 +158,8 @@ object Similarity {
     *
     * Envelope: the 16-bit cap is reached at n ≈ 2²² ≈ 4 M vectors;
     * past it mean bucket size — and with it per-bucket candidate
-    * noise — grows ∝ n again (the same stepped-growth shape as
-    * [[Dedup.autoBands]] between its r bumps; measured linear to 400 k,
-    * the largest clean point this box's disk allows). Beyond ~4 M,
+    * noise — grows ∝ n again (measured linear to 400 k, the largest
+    * clean point this box's disk allows). Beyond ~4 M,
     * raise the cap explicitly (recall per table falls as bits rise —
     * compensate with nTables) or set `maxBucket` to bound the noise
     * with the documented graceful recall trade. */

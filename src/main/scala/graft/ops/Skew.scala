@@ -1,16 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for hot keys (the builder-prompt scale checklist:
   * "skewed keys → salting or AQE skew-join").
   *
   * AQE's skew-join split (on by default in Spark 4) covers
-  * sort-merge joins at runtime; these helpers cover the two cases AQE
-  * does not: a skewed AGGREGATION (one reducer owns the hot key) and a
-  * skewed broadcast-side join fan-out. Both are pure plan rewrites —
-  * deterministic results, no sampling.
+  * sort-merge joins at runtime; this helper covers the case AQE does
+  * not: a skewed AGGREGATION (one reducer owns the hot key). It is a
+  * pure plan rewrite — deterministic results, no sampling.
   */
 object Skew {
 
@@ -27,21 +26,5 @@ object Skew {
     partial
       .groupBy(keys.map(col): _*)
       .agg(sum(col("__n")).as("n"), sum(col("__s")).as(s"sum_$valueCol"))
-  }
-
-  /** Salted equi-join against a small (broadcastable) right side: the
-    * big side takes a random-ish salt in [0, buckets); the small side
-    * is exploded ×buckets so every (key, salt) pair still matches.
-    * Breaks one hot key across `buckets` tasks at the cost of
-    * replicating the small side. */
-  def saltedBroadcastJoin(big: DataFrame, small: DataFrame, key: String,
-      buckets: Int = 16, joinType: String = "inner"): DataFrame = {
-    val saltedBig = big.withColumn("__salt",
-      pmod(monotonically_increasing_id(), lit(buckets.toLong)))
-    val explodedSmall = small
-      .withColumn("__salt", explode(sequence(lit(0L), lit((buckets - 1).toLong))))
-    saltedBig
-      .join(broadcast(explodedSmall), Seq(key, "__salt"), joinType)
-      .drop("__salt")
   }
 }

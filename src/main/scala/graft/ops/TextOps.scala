@@ -138,13 +138,6 @@ object TextOps {
   def fingerprint(text: Column): Column =
     md5(lower(regexp_replace(trim(text), "\\s+", " ")))
 
-  /** Polynomial rolling hash over tokens (base-31 mod 2^61-1 style,
-    * in long arithmetic with natural wrap) — an order-sensitive
-    * fingerprint, cheap to compute distributively. */
-  def rollingHash(text: Column): Column =
-    aggregate(tokens(text), lit(0L),
-      (acc, t) => acc * lit(1000003L) + crc32(t).cast("long"))
-
   /** Context-window chunking with stride overlap — the LONG-doc
     * complement of sequence packing (packing joins short samples;
     * embedding/RAG and max-length pipelines SPLIT long ones): the

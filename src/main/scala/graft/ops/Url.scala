@@ -29,9 +29,9 @@ import org.apache.spark.sql.functions._
   * handful of query params per row, not per-token corpus work.
   *
   * Scale design (100 TB): canonicalization is scan-local;
-  * [[dedupByCanonical]] / [[keepFirstByUrl]] shuffle once on the
-  * canonical key — the same single-shuffle shape as exact content
-  * dedup, and the key is a short URL string, never document text.
+  * [[dedupByCanonical]] shuffles once on the canonical key — the same
+  * single-shuffle shape as exact content dedup, and the key is a short
+  * URL string, never document text.
   */
 object Url {
 
@@ -72,8 +72,8 @@ object Url {
     * Scheme and fragment are gone by construction. NULL for input with
     * no parseable scheme://host — "no canonical identity" must be
     * VISIBLE: an empty-string key would silently collapse every
-    * unparseable row into one dedup group ([[dedupByCanonical]] and
-    * [[keepFirstByUrl]] fall back to the raw spelling for such rows). */
+    * unparseable row into one dedup group ([[dedupByCanonical]] falls
+    * back to the raw spelling for such rows). */
   def canonicalize(url: Column): Column = {
     val h = host(url)
     val q = queryCanonical(url)
@@ -109,11 +109,4 @@ object Url {
         count(lit(1)).as("n_urls"),
         countDistinct(col(urlCol)).as("n_raw"))
   }
-
-  /** Row-level keep-first: the surviving row per canonical URL, all
-    * original columns intact — [[Dedup.exact]] keyed on the canonical
-    * form (deterministic min-id winner, reproducible run-to-run).
-    * Unparseable URLs keep their rows unless raw-identical. */
-  def keepFirstByUrl(df: DataFrame, urlCol: String, idCol: String): DataFrame =
-    Dedup.exact(df, dedupKey(col(urlCol)), col(idCol))
 }

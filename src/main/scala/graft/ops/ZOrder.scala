@@ -174,20 +174,17 @@ object ZOrder {
       floor((c.cast("double") - min) / (max - min) * n)))
   }
 
-  /** Quantile bucketing of a numeric column into ≤ 2^bits equal-POPULATION
+  /** Quantile bucketing of numeric columns into ≤ 2^bits equal-POPULATION
     * buckets: boundaries from one `approx_percentile` pass (an
     * aggregate — KB-scale result), assignment by codegen'd binary
     * search ([[graft.expr.QuantileBucket]]). This is the skew-robust
     * bucketizer: a heavy-hitter value can still overfill one bucket
     * (identical values are inseparable), but a long-tailed distribution
     * no longer collapses every row into bucket 0 the way linear
-    * min/max scaling does. */
-  def bucketizeByQuantiles(df: DataFrame, colName: String, bits: Int): Column =
-    bucketizeByQuantilesMulti(df, Seq(colName), bits).head
-
-  /** Quantile-bucket expressions for SEVERAL columns from ONE
-    * aggregation pass — the boundary fetch is a full scan, so clustering
-    * on 2–3 dims must not pay it per dim. */
+    * min/max scaling does.
+    *
+    * SEVERAL columns share ONE aggregation pass — the boundary fetch is
+    * a full scan, so clustering on 2–3 dims must not pay it per dim. */
   def bucketizeByQuantilesMulti(df: DataFrame, colNames: Seq[String], bits: Int): Seq[Column] = {
     require(bits >= 1 && bits <= 12, "quantile bucketing supports 1..12 bits (2..4096 buckets)")
     val n = 1 << bits

@@ -2,6 +2,7 @@ package graft.domain
 
 import graft.SparkSpec
 import graft.sources.DbfReader
+import graft.testutil.{Adm2Fixture, FileBuilders}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -57,5 +58,31 @@ class DimInitSpec extends SparkSpec {
     // district ids are dense 1..112 in file order
     val ids = dims.districts.select("district_id").collect().map(_.getInt(0)).sorted
     assert(ids.head == 1 && ids.last == 112)
+  }
+
+  test("seeds a generated TIS-620 ADM2 file: northern scope, prefixes stripped, file-order ids") {
+    // the fixture's rows with the unit prefixes the reference spells
+    // out (จังหวัด / อำเภอ), read back through the default-charset reader
+    val rows = for ((pEn, pTh, ds) <- Adm2Fixture.Provinces; (dEn, dTh) <- ds)
+      yield Seq(pEn, s"จังหวัด$pTh", dEn, s"อำเภอ$dTh")
+    val p = Files.createTempFile("adm2-prefixed", ".dbf")
+    try {
+      Files.write(p, FileBuilders.dbf(
+        fields = Seq(("ADM1_EN", 40), ("ADM1_TH", 60), ("ADM2_EN", 50), ("ADM2_TH", 60)),
+        records = rows))
+      val df = DbfReader.read(spark, p.toString, withRecno = true)
+      val dims = DimInit.seed(spark, df,
+        DimInit.emptyProvinces(spark), DimInit.emptyDistricts(spark))
+      assert(dims.provinces.count() == Adm2Fixture.NorthernProvinces)
+      assert(dims.districts.count() == Adm2Fixture.NorthernDistricts)
+      val cm = dims.provinces.where($"province_name_en" === "Chiang Mai").head()
+      assert(cm.getString(1) == "เชียงใหม่")
+      // district ids are dense 1..n in file order, Bangkok/Phuket skipped
+      val northern = Adm2Fixture.Provinces
+        .filterNot(p => Set("Bangkok", "Phuket")(p._1)).flatMap(_._3.map(_._2))
+      val got = dims.districts.orderBy("district_id").collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSeq
+      assert(got == northern.zipWithIndex.map { case (th, i) => (i + 1, th) })
+    } finally Files.delete(p)
   }
 }

@@ -51,62 +51,6 @@ class BitextSpec extends SparkSpec {
       .where(col("tid") === 14L).count() == 0, "null embeddings must drop")
   }
 
-  test("ivfCandidates (full probe, both directions) mines identically to brute candidates") {
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id").as("id"), col("embedding"))
-    val s = e.where(col("id") % 2 === 0)
-    val t = e.where(col("id") % 2 === 1)
-    val (nS, nT) = (s.count().toInt, t.count().toInt)
-    val sModel = Ivf.fit(s, nlist = 4, iters = 2)
-    val tModel = Ivf.fit(t, nlist = 4, iters = 2)
-    def mined(pairs: org.apache.spark.sql.DataFrame) =
-      Bitext.mine(pairs, k = 4, threshold = 1.0)
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          math.round(r.getDouble(2) * 1e9))).toSet
-    // full probe + corpus-sized k ⇒ the IVF tier sees every pair ⇒
-    // the cell-partitioned production composition reproduces brute
-    // mining bit-for-bit (margins compared at 9 dp)
-    val brute = mined(Bitext.bruteCandidates(s, t))
-    val ivf = mined(Bitext.ivfCandidates(s, t, k = math.max(nS, nT),
-      sModel, tModel, nprobe = 4))
-    assert(ivf == brute, "recall-complete IVF tier diverged from brute mining")
-    assert(brute.nonEmpty, "fixture mined nothing — weak")
-    // and a REDUCED probe still yields only margin-honest pairs (a
-    // subset relation is not guaranteed for mutual-best mining, but
-    // every mined pair must carry the same margin brute computes for
-    // it when both sides' neighbourhoods happen to be fully seen — so
-    // just pin the shape: non-empty under the fixture, sid/tid drawn
-    // from the right sides)
-    val reduced = Bitext.ivfCandidates(s, t, k = 8, sModel, tModel, nprobe = 1)
-      .collect()
-    assert(reduced.forall(r => r.getLong(0) % 2 == 0 && r.getLong(1) % 2 == 1))
-  }
-
-  test("bitextMine: both routes — brute, IVF — reproduce brute mining under covering settings") {
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id").as("id"), col("embedding"))
-    val s = e.where(col("id") % 2 === 0)
-    val t = e.where(col("id") % 2 === 1)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1),
-        math.round(r.getDouble(2) * 1e9))).toSet
-    val brute = canon(Bitext.mine(Bitext.bruteCandidates(s, t), k = 4, threshold = 1.0))
-    assert(brute.nonEmpty, "fixture mined nothing — weak")
-    // default thresholds: a gate-scale corpus routes to the exact tier
-    assert(canon(Bitext.bitextMine(s, t, k = 4, threshold = 1.0)) == brute,
-      "default routing at gate scale must take the exact brute tier")
-    // bruteMax forced to 0 so the IVF tier is the one chosen; covering
-    // settings (nprobe ≥ nlist) make each direction's top-k EXACT, and
-    // an exact union top-k mines identically to all-pairs: per sid the
-    // union's top-k by cosine IS its true top-k (any extra pair beating
-    // the kth would itself be in the true top-k), so ranks,
-    // neighbourhood means, margins, and the mutual-best windows all
-    // coincide with brute's.
-    val viaIvf = canon(Bitext.bitextMine(s, t, k = 4, threshold = 1.0,
-      bruteMax = 0, nlist = 4, nprobe = 4, ivfIters = 2))
-    assert(viaIvf == brute, "IVF route diverged from brute mining")
-  }
-
   test("margin normalizes hubness: the hub's raw cosine outranks, its margin does not") {
     // a query whose RAW best is the hub, but whose margin prefers the
     // honest (less universally-popular) neighbour

@@ -139,15 +139,6 @@ class BpeSpec extends SparkSpec {
     assert(rows(false) == rows(true))
   }
 
-  test("saveMerges/loadMerges round-trips the artifact in rank order") {
-    val merges = Bpe.train(freq, 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpemerges").toString
-    try {
-      Bpe.saveMerges(spark, merges, s"$dir/m")
-      assert(Bpe.loadMerges(spark, s"$dir/m") == merges)
-    } finally deleteRecursively(dir)
-  }
-
   test("vocabulary: sorted base symbols then merge outputs; collisions fail fast") {
     val merges = Bpe.train(freq, 4)
     val vocab = Bpe.vocabulary(freq.keys, merges)

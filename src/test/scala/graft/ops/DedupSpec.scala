@@ -187,44 +187,6 @@ class DedupSpec extends SparkSpec {
     // high-jaccard dups should be total at 16 hashes / 4 bands
     assert(lsh == brute)
     assert(brute.nonEmpty)
-    // auto-sized bands: different candidate set, same exact verify —
-    // never a false positive, and recall ≥ the 0.95 analytic floor
-    // (on this corpus the planted dups are far above threshold, so
-    // auto finds them all)
-    val auto = Dedup.minhashNearDupsAuto(d, threshold = 0.8)
-      .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(auto.subsetOf(brute))
-    assert(auto.size.toDouble >= 0.95 * brute.size)
-  }
-
-  test("autoBands: r grows with log n, analytic recall holds, bands divide k") {
-    // P(candidate) for a pair at similarity s under (k, b) banding —
-    // evaluated at the threshold it is the recall, at a background
-    // similarity it is the noise rate
-    def collisionProb(s: Double, k: Int, b: Int): Double =
-      1 - math.pow(1 - math.pow(s, k / b), b)
-    val sizes = Seq(1000L, 100000L, 1000000L, 100000000L)
-    val rs = sizes.map { n =>
-      val (k, b) = Dedup.autoBands(n, threshold = 0.8)
-      assert(k % b == 0, s"bands must divide k at n=$n")
-      assert(collisionProb(0.8, k, b) >= 0.95, s"recall floor at n=$n: (k=$k,b=$b)")
-      k / b
-    }
-    // rows-per-band is non-decreasing in n: the background collision
-    // probability per pair falls as the pair count rises
-    assert(rs == rs.sorted, s"r not monotone: $rs")
-    assert(rs.last > rs.head, "r must actually grow across 5 decades")
-    // the fixed legacy config's noise floor is strictly above auto's at
-    // large n for a moderate-similarity (0.25) background pair
-    val (k6, b6) = Dedup.autoBands(1600000L, threshold = 0.8)
-    assert(collisionProb(0.25, k6, b6) < collisionProb(0.25, 48, 16) / 20,
-      s"auto config must cut the 0.25-sim collision rate >20x, got " +
-        s"${collisionProb(0.25, k6, b6)} vs ${collisionProb(0.25, 48, 16)}")
-    // output guard: a threshold far below the banding S-curve at large
-    // n fails fast with a clear message instead of overflowing k
-    assertThrows[IllegalArgumentException] {
-      Dedup.autoBands(100000000L, threshold = 0.1)
-    }
   }
 
   test("requireBandRecall: high-j results pass, threshold-hugging volume fails with the covering message") {

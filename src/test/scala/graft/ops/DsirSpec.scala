@@ -139,30 +139,6 @@ class DsirSpec extends SparkSpec {
     assert(s.getAs[Long]("score") == s.getAs[Long]("n_terms") * 1000000L)
   }
 
-  test("scoreRowLocal ≡ scoreDocs, batch and as a stateless stream") {
-    val w = weights("ratio")
-    val wArr = Dsir.weightsArray(w, B)
-    val viaJoin = Dsir.scoreDocs(corpus, "doc_id", "text", w, B)
-      .collect().map(_.toSeq).toSet
-    val viaLocal = Dsir.scoreRowLocal(corpus, "doc_id", "text", wArr)
-      .collect().map(_.toSeq).toSet
-    assert(viaLocal == viaJoin,
-      "the literal-array row-local form must match the join form row-for-row")
-    // streaming: the row-local form is a pure projection, so it runs in
-    // APPEND mode on an unbounded stream with zero state
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    in.addData(corpus.collect().map(r => (r.getLong(0), r.getString(1))).toSeq: _*)
-    val q = Dsir.scoreRowLocal(
-        in.toDF().toDF("doc_id", "text"), "doc_id", "text", wArr)
-      .writeStream.format("memory").queryName("dsir_stream")
-      .outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("dsir_stream").collect().map(_.toSeq).toSet
-    assert(streamed == viaJoin, "streamed scores must equal the batch form")
-  }
-
   test("selectTopK: deterministic (score desc, id) order with rank") {
     val scored = Dsir.scoreDocs(corpus, "doc_id", "text", weights("ratio"), B)
     val top = Dsir.selectTopK(scored, "doc_id", 3).collect()

@@ -1,12 +1,13 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.testutil.MediaFixture
 import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
-  private def media = Multimodal.mediaFromText(spark,
+  private def media = MediaFixture.mediaFromText(spark,
     Seq((0L, "an image payload"), (1L, "an audio payload"), (2L, "a video payload"))
       .toDF("doc_id", "text"), "doc_id", "text")
 
@@ -30,7 +31,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("extracted features compose into the ANN path (media → vectors → top-k)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val m = Multimodal.mediaFromText(spark, docs, "doc_id", "text")
+    val m = MediaFixture.mediaFromText(spark, docs, "doc_id", "text")
     val feats = Multimodal.extractFeatures(m).toDF()
       .select(col("media_id").as("id"), col("feature").as("embedding"))
     val q = feats.where(col("id") < 3).select(col("id").as("qid"), col("embedding"))

@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class PackingSpec extends SparkSpec {
@@ -9,11 +11,23 @@ class PackingSpec extends SparkSpec {
   private def docs(n: Int) =
     (1 to n).map(i => (i.toLong, (i % 37 + 1).toLong)).toDF("id", "n_tok")
 
+  /** The naive single-partition global window — the semantics oracle
+    * for [[Packing.assignWindows]]. `Window.orderBy` without
+    * partitioning is one reducer, so this is for small inputs only. */
+  private def assignWindowsNaive(docs: DataFrame, orderCol: String,
+      tokCol: String, budget: Long): DataFrame = {
+    val w = Window.orderBy(orderCol)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    docs
+      .withColumn("tokens_before", coalesce(sum(col(tokCol)).over(w), lit(0L)))
+      .withColumn("window_id", floor(col("tokens_before") / budget))
+  }
+
   test("distributed prefix sum ≡ naive global window, many partitions") {
     val d = docs(500).repartition(7) // scrambled input layout
     val fast = Packing.assignWindows(d, "id", "n_tok", budget = 100, numPartitions = 8)
       .select("id", "tokens_before", "window_id")
-    val naive = Packing.assignWindowsNaive(docs(500), "id", "n_tok", budget = 100)
+    val naive = assignWindowsNaive(docs(500), "id", "n_tok", budget = 100)
       .select("id", "tokens_before", "window_id")
     assert(fast.exceptAll(naive).isEmpty && naive.exceptAll(fast).isEmpty)
   }
@@ -57,7 +71,7 @@ class PackingSpec extends SparkSpec {
       .toDF("id", "n_tok")
     val fast = Packing.assignWindows(d, "id", "n_tok", budget = 100, numPartitions = 8)
       .select("id", "tokens_before", "window_id")
-    val naive = Packing.assignWindowsNaive(d, "id", "n_tok", budget = 100)
+    val naive = assignWindowsNaive(d, "id", "n_tok", budget = 100)
       .select("id", "tokens_before", "window_id")
     assert(fast.exceptAll(naive).isEmpty && naive.exceptAll(fast).isEmpty)
   }

@@ -29,63 +29,6 @@ class ProfileSpec extends SparkSpec {
     assert(e.getMessage.contains("nope"))
   }
 
-  test("appendStats: two increments merge to the one-shot profile exactly") {
-    val a = Seq((Option(1L), Option("x")), (Option(5L), Option.empty[String]),
-      (Option(2L), Option("y")))
-    val b = Seq((Option(9L), Option("x")), (Option.empty[Long], Option("z")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-profinc").toString
-    try {
-      Profile.appendStats(a.toDF("id", "tag"), s"$dir/inc", Seq("id", "tag"))
-      Profile.appendStats(b.toDF("id", "tag"), s"$dir/inc", Seq("id", "tag"))
-      Profile.appendStats((a ++ b).toDF("id", "tag"), s"$dir/one", Seq("id", "tag"))
-      def rows(p: String) = Profile.readProfile(spark, p)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getString(4), r.getString(5))).toSeq
-      val inc = rows(s"$dir/inc")
-      // fold-in ≡ one-shot: counts/min/max exact AND the HLL estimate
-      // IDENTICAL (union of sketches ≡ sketch of the union)
-      assert(inc == rows(s"$dir/one"))
-      // and the mergeable stats agree with the exact one-pass profile
-      val exact = Profile.profile((a ++ b).toDF("id", "tag"), Seq("id", "tag"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getString(4), r.getString(5))).toSeq
-      assert(inc.map(r => (r._1, r._2, r._3, r._5, r._6)) ==
-        exact.map(r => (r._1, r._2, r._3, r._5, r._6)))
-      // tiny cardinalities: the HLL estimate is exact here
-      assert(inc.map(r => (r._1, r._4)) == exact.map(r => (r._1, r._4)))
-    } finally deleteDir(dir)
-  }
-
-  test("appendStats: replayed batchId-stamped append is idempotent; unstamped rows all count") {
-    val a = Seq((Option(1L), Option("x")), (Option(5L), Option.empty[String]))
-    val b = Seq((Option(9L), Option("x")), (Option(2L), Option("z")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-profreplay").toString
-    try {
-      def rows(p: String) = Profile.readProfile(spark, p)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getString(4), r.getString(5))).toSeq
-      // streaming path: batch 0 lands, crash before checkpoint commit,
-      // foreachBatch replays batch 0 (at-least-once), then batch 1
-      Profile.appendStats(a.toDF("id", "tag"), s"$dir/s", Seq("id", "tag"), Some(0L))
-      Profile.appendStats(a.toDF("id", "tag"), s"$dir/s", Seq("id", "tag"), Some(0L))
-      Profile.appendStats(b.toDF("id", "tag"), s"$dir/s", Seq("id", "tag"), Some(1L))
-      // reference: each batch exactly once
-      Profile.appendStats(a.toDF("id", "tag"), s"$dir/r", Seq("id", "tag"), Some(0L))
-      Profile.appendStats(b.toDF("id", "tag"), s"$dir/r", Seq("id", "tag"), Some(1L))
-      assert(rows(s"$dir/s") == rows(s"$dir/r"),
-        "replayed stamped batch must merge to nothing")
-      // batch API (no batchId): identical appends are DISTINCT increments
-      Profile.appendStats(a.toDF("id", "tag"), s"$dir/u", Seq("id", "tag"))
-      Profile.appendStats(a.toDF("id", "tag"), s"$dir/u", Seq("id", "tag"))
-      val u = rows(s"$dir/u")
-      assert(u.head._2 == 2L * a.size, "unstamped appends must all count")
-      // mixed dir: unstamped legacy rows + stamped rows coexist
-      Profile.appendStats(b.toDF("id", "tag"), s"$dir/u", Seq("id", "tag"), Some(7L))
-      Profile.appendStats(b.toDF("id", "tag"), s"$dir/u", Seq("id", "tag"), Some(7L))
-      assert(rows(s"$dir/u").head._2 == 2L * a.size + b.size)
-    } finally deleteDir(dir)
-  }
-
   test("profile plan: one scan feeds every metric (no per-column passes)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-profile").toString
     try {

@@ -9,14 +9,17 @@ class SamplingSpec extends SparkSpec {
   private val rows = (1 to 2000).map(i => (i.toLong, s"doc text $i", if (i % 2 == 0) "en" else "th"))
   private def df = rows.toDF("id", "text", "lang")
 
-  test("hashSample: deterministic, content-keyed, ~rate") {
-    val a = Sampling.hashSample(df, col("text"), 250).select("id").as[Long].collect().toSet
-    val b = Sampling.hashSample(df.repartition(13), col("text"), 250)
-      .select("id").as[Long].collect().toSet
+  test("permilleBucket sample: deterministic, content-keyed, ~rate") {
+    // one stratum at the default rate: a plain content-hash sample
+    def sample(d: org.apache.spark.sql.DataFrame, permille: Int) =
+      Sampling.stratifiedSample(d, col("lang"), col("text"), Map.empty,
+        defaultPermille = permille).select("id").as[Long].collect().toSet
+    val a = sample(df, 250)
+    val b = sample(df.repartition(13), 250)
     assert(a == b) // partitioning-independent
     assert(math.abs(a.size - 500) < 100) // ~25% of 2000, md5 is uniform
     // monotone: raising the rate only ADDS rows (bucket predicate is <)
-    val c = Sampling.hashSample(df, col("text"), 600).select("id").as[Long].collect().toSet
+    val c = sample(df, 600)
     assert(a.subsetOf(c))
   }
 
@@ -60,7 +63,8 @@ class SamplingSpec extends SparkSpec {
     val d = Seq((1L, null.asInstanceOf[String]), (2L, ""), (3L, "x"))
       .toDF("id", "text")
     // null bucket == empty-string bucket: both in or both out, always
-    val both = Sampling.hashSample(d, col("text"), 1000).count()
+    val both = Sampling.stratifiedSample(d, lit("all"), col("text"),
+      Map.empty, defaultPermille = 1000).count()
     assert(both == 3L) // rate 1000 keeps EVERYTHING, null key included
     val nullBucket = d.where(col("id") === 1)
       .select(Sampling.permilleBucket(col("text"))).head().getInt(0)

@@ -139,39 +139,6 @@ class SemDedupSpec extends SparkSpec {
     assert(kept == Seq(1L, 2L)) // the documented cluster-boundary approximation
   }
 
-  test("removeSeen: takedown ≡ index accumulated over the survivors; evicted vector stops pruning") {
-    val rmDir = java.nio.file.Files.createTempDirectory("semrm").toString
-    val survDir = java.nio.file.Files.createTempDirectory("semsurv").toString
-    val tau = 0.999
-    // batch 1 seeds the index; vector 11 is the near-dup witness that
-    // would prune any later τ-close arrival
-    val b1 = corpus.where(col("id") < 20L)
-    SemDedup.semDedupIncrement(b1, centroids, tau, rmDir)
-    SemDedup.semDedupIncrement(b1.where(col("id") =!= 11L), centroids, tau, survDir)
-    // takedown of 11 (+ an unknown id, which must no-op)
-    SemDedup.removeSeen(spark, rmDir, Seq(11L, 999L).toDF("id"))
-    def rows(p: String) = spark.read.option("mergeSchema", "true")
-      .parquet(s"$p/vectors").select("id", "cluster")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rows(rmDir) == rows(survDir),
-      "stripped seen index must equal one accumulated over the survivors")
-    // a new arrival τ-close ONLY to the removed vector now survives on
-    // both paths (the takedown semantics: an erased embedding must not
-    // keep suppressing near-duplicates). Geometry: τ=0.999 ↔ ~2.56°;
-    // 11 sits ~0.58° off the x-axis, so a vector at 3° is ~2.42° from
-    // 11 (cos ≈ 0.99911, inside τ) and 3° from 10 (cos ≈ 0.99863,
-    // outside), and ~15° from 12 — close to the witness alone
-    val b2 = Seq((30L, Array(0.99863f, 0.05234f, 0.0f))).toDF("id", "embedding")
-    def kept(p: String) = SemDedup.semDedupIncrement(b2, centroids, tau, p)
-      .select("id").collect().map(_.getLong(0)).toSet
-    val gotRm = kept(rmDir)
-    assert(gotRm == kept(survDir))
-    assert(gotRm.contains(30L), s"vector 30 should survive post-takedown; got $gotRm")
-    // idempotent re-run (30's increment already folded itself in)
-    SemDedup.removeSeen(spark, rmDir, Seq(11L).toDF("id"))
-    assert(rows(rmDir).map(_._1) == Set(10L, 12L, 30L))
-  }
-
   test("prune composes with Ivf.assign output (cell/vec columns)") {
     val model = Ivf.Model(Array(
       0 -> Array(1.0, 0.0, 0.0),
@@ -181,33 +148,5 @@ class SemDedupSpec extends SparkSpec {
       clusterCol = "cell", vecCol = "vec")
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(kept == Seq(10L, 12L, 20L))
-  }
-  test("torn compaction swap (vectors renamed to __old): the next increment restores, never degrades to empty") {
-    val path = java.nio.file.Files.createTempDirectory("semdd-torn").toString
-    val tau = 0.999
-    SemDedup.semDedupIncrement(corpus.where(col("id") < 20L), centroids, tau,
-      path, Some(0L)).count()
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def p(x: String) = new org.apache.hadoop.fs.Path(x)
-    // crash between compactDir's two renames: vectors/ gone, __old full
-    assert(fs.rename(p(s"$path/vectors"), p(s"$path/vectors__old")))
-    // the exists-probe would read this as "no index yet": batch 2's
-    // near-dup of seen vector 10 would WRONGLY survive, and the append
-    // would re-create the seen set holding only batch 2
-    // 30 is τ-close to seen vector 10 (cos ≈ 0.99995 ≥ 0.999)
-    val b2 = Seq((30L, Array(0.9999f, 0.01f, 0.0f))).toDF("id", "embedding")
-    val kept = SemDedup.semDedupIncrement(b2, centroids, tau, path, Some(1L))
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(!kept.contains(30L),
-      "cross-batch prune lost after a torn swap - the seen index was not restored")
-    val ids = spark.read.option("mergeSchema", "true").parquet(s"$path/vectors")
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(Set(10L, 11L, 12L).subsetOf(ids), s"restored index lost batch 1: $ids")
-    // un-restorable state (only the staged dir survives) fails loudly
-    assert(fs.rename(p(s"$path/vectors"), p(s"$path/vectors__compacting")))
-    intercept[IllegalStateException] {
-      SemDedup.semDedupIncrement(b2, centroids, tau, path, Some(2L)).count()
-    }
   }
 }

@@ -154,22 +154,6 @@ class SimilaritySpec extends SparkSpec {
       nBits = 4, nTables = 8, maxBucket = 0)) == uncapped)
   }
 
-  test("cosineCandidatesBucketed: full coverage yields every pair; capped is a subset") {
-    val dir = "/root/testdata/sf0.001"
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id").as("id"), col("embedding"))
-    val n = e.count()
-    val full = Similarity.cosineCandidatesBucketed(e, nBits = 0, nTables = 1).count()
-    assert(full == n * (n - 1) / 2) // one bucket ⇒ all C(n,2) pairs
-    def pairSet(nBits: Int, maxBucket: Int) =
-      Similarity.cosineCandidatesBucketed(e, nBits = nBits, maxBucket = maxBucket)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val uncapped = pairSet(4, 0)
-    val capped = pairSet(4, 20)
-    assert(capped.subsetOf(uncapped))
-    assert(capped.size < uncapped.size) // the 20-cap really dropped buckets
-  }
-
   test("fused LshKeys expression equals the per-table column composition") {
     val dir = "/root/testdata/sf0.001"
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -180,9 +164,9 @@ class SimilaritySpec extends SparkSpec {
     // or-reduce of sign bits of per-plane dots
     val composed = e.select(col("id"), array((0 until nTables).map(t =>
       struct(lit(t).as("tbl"),
-        Similarity.lshKey(col("v"), nBits, t, dim).as("bucket"))): _*).as("ks"))
+        LshReference.lshKey(col("v"), nBits, t, dim).as("bucket"))): _*).as("ks"))
     val planes = Array.tabulate(nTables, nBits, dim)((t, b, d) =>
-      Similarity.planeComponentForTest(t, b, d))
+      Similarity.planeComponent(t, b, d))
     val fused = e.select(col("id"), graft.expr.LshKeys.lshKeys(col("v"), planes).as("ks"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("id"), explode(col("ks")).as("k"))
@@ -200,8 +184,8 @@ class SimilaritySpec extends SparkSpec {
   test("lsh bucket key is deterministic") {
     val e = Seq((0L, Array(0.5f, -0.25f, 1.0f))).toDF("id", "embedding")
       .select(transform(col("embedding"), _.cast("double")).as("v"))
-    val k1 = e.select(Similarity.lshKey(col("v"), 8, 0, 3)).head().getLong(0)
-    val k2 = e.select(Similarity.lshKey(col("v"), 8, 0, 3)).head().getLong(0)
+    val k1 = e.select(LshReference.lshKey(col("v"), 8, 0, 3)).head().getLong(0)
+    val k2 = e.select(LshReference.lshKey(col("v"), 8, 0, 3)).head().getLong(0)
     assert(k1 == k2)
   }
 

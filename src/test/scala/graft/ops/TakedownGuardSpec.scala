@@ -1,8 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.streaming.EventStreams
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** The takedown-vs-streaming-checkpoint runtime guard
@@ -34,32 +32,26 @@ class TakedownGuardSpec extends SparkSpec {
   }
 
   test("bm25 removeDocs: refuses an uncommitted batch's docs; allows after commit; index untouched by the refusal") {
-    implicit val sc = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-tdguard").toString
     try {
-      val in = MemoryStream[(Long, String)]
-      val q = EventStreams.bm25IndexStream(
-        in.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        s"$dir/idx", s"$dir/ckpt", nBuckets = 8,
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-      in.addData(Seq((1L, "spark joins data with spark"),
-        (2L, "hash join beats sort join")))
-      q.processAllAvailable()
-      in.addData(Seq((3L, "the vector scan is fast"), (4L, "spark hash join")))
-      q.processAllAvailable()
-      q.stop()
+      // two stamped appends, as a maintaining stream's batches 0 and 1
+      // would make them
+      Bm25.appendIndex(Seq((1L, "spark joins data with spark"),
+        (2L, "hash join beats sort join")).toDF("doc_id", "text"),
+        s"$dir/idx", nBuckets = 8, batchId = Some(0L))
+      Bm25.appendIndex(Seq((3L, "the vector scan is fast"),
+        (4L, "spark hash join")).toDF("doc_id", "text"),
+        s"$dir/idx", nBuckets = 8, batchId = Some(1L))
 
-      // simulate the race: batch 1's fold-in landed (the foreachBatch
-      // body ran) but its checkpoint commit did not — exactly the
-      // crash window whose replay re-appends docs 3 and 4
-      val commit1 = java.nio.file.Paths.get(s"$dir/ckpt/commits/1")
-      val commit1Bytes = java.nio.file.Files.readAllBytes(commit1)
-      java.nio.file.Files.delete(commit1)
+      // the race: batch 1's fold-in landed but its checkpoint commit
+      // did not — exactly the crash window whose replay re-appends
+      // docs 3 and 4
+      val cp = fakeCheckpoint(dir, offsets = Seq(0L, 1L), commits = Seq(0L))
 
       val before = spark.read.parquet(s"$dir/idx/postings").count()
       val err = intercept[IllegalStateException] {
         Bm25.removeDocs(spark, s"$dir/idx", Seq(3L).toDF("doc_id"),
-          removeId = Some(7L), checkpoint = Some(s"$dir/ckpt"))
+          removeId = Some(7L), checkpoint = Some(cp))
       }
       assert(err.getMessage.contains("refusing takedown"))
       assert(err.getMessage.contains("1"), "names the uncommitted batch")
@@ -74,19 +66,20 @@ class TakedownGuardSpec extends SparkSpec {
       // required in BOTH modes (the r18 narrowing)
       intercept[IllegalStateException] {
         Bm25.removeDocs(spark, s"$dir/idx", Seq(1L).toDF("doc_id"),
-          removeId = Some(8L), checkpoint = Some(s"$dir/ckpt"))
+          removeId = Some(8L), checkpoint = Some(cp))
       }
       assert(spark.read.parquet(s"$dir/idx/postings").count() == before)
 
-      // commit restored (the stream finished its batch) → allowed, and
-      // the stripped index answers like a build over the survivors
-      java.nio.file.Files.write(commit1, commit1Bytes)
+      // batch 1 commits (the stream finished it) → allowed, and the
+      // stripped index answers like a build over the survivors
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(cp, "commits", "1"), "v1")
       Bm25.removeDocs(spark, s"$dir/idx", Seq(1L).toDF("doc_id"),
-        removeId = Some(8L), checkpoint = Some(s"$dir/ckpt"))
+        removeId = Some(8L), checkpoint = Some(cp))
       assert(spark.read.parquet(s"$dir/idx/postings")
         .where(col("doc_id") === 1L).isEmpty)
       Bm25.removeDocs(spark, s"$dir/idx", Seq(3L).toDF("doc_id"),
-        removeId = Some(7L), checkpoint = Some(s"$dir/ckpt"))
+        removeId = Some(7L), checkpoint = Some(cp))
       val got = Bm25.topKIndexed(spark, s"$dir/idx",
         Seq("spark", "join", "scan"), k = 10)
         .as[(Long, Long, Double)].collect().toSet
@@ -174,7 +167,7 @@ class TakedownGuardSpec extends SparkSpec {
     } finally deleteRecursively(dir)
   }
 
-  test("ivf/ivfpq removeVectors and semdedup removeSeen: guard wired through (stamped precise mode)") {
+  test("ivf/ivfpq removeVectors: guard wired through (stamped precise mode)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-tdguard4").toString
     try {
       val rng = new scala.util.Random(42)
@@ -208,6 +201,28 @@ class TakedownGuardSpec extends SparkSpec {
         removeId = Some(3L), checkpoint = Some(cp))
       assert(spark.read.parquet(s"$dir/ivf/cells")
         .where(col("id") === 100L).isEmpty)
+
+      // the same wiring on IVF-PQ: a stamped append whose batch has not
+      // committed blocks both its own and an initial-build vector
+      val pqModel = IvfPq.fit(vecs, nlist = 4, m = 4, k = 8, iters = 2)
+      IvfPq.save(spark, pqModel, vecs, s"$dir/pq")
+      IvfPq.appendIndex(spark,
+        Seq((200L, Array.fill(8)(rng.nextDouble()))).toDF("id", "embedding"),
+        s"$dir/pq", batchId = Some(0L))
+      val pqCp = fakeCheckpoint(s"$dir/p", offsets = Seq(0L), commits = Nil)
+      for (id <- Seq(200L, 6L)) intercept[IllegalStateException] {
+        IvfPq.removeVectors(spark, s"$dir/pq", Seq(id).toDF("id"),
+          removeId = Some(id), checkpoint = Some(pqCp))
+      }
+      assert(spark.read.option("mergeSchema", "true").parquet(s"$dir/pq/cells")
+        .where(col("id").isin(200L, 6L)).count() == 2L, "index untouched by refusal")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(pqCp, "commits", "0"), "v1")
+      for (id <- Seq(200L, 6L))
+        IvfPq.removeVectors(spark, s"$dir/pq", Seq(id).toDF("id"),
+          removeId = Some(id), checkpoint = Some(pqCp))
+      assert(spark.read.option("mergeSchema", "true").parquet(s"$dir/pq/cells")
+        .where(col("id").isin(200L, 6L)).isEmpty)
     } finally deleteRecursively(dir)
   }
 }

@@ -39,13 +39,6 @@ class TextOpsSpec extends SparkSpec {
     assert(f1 == f2 && f1 != f3)
   }
 
-  test("rollingHash is order-sensitive where fingerprint-set ops are not") {
-    val h1 = one[Long]("a b c", TextOps.rollingHash)
-    val h2 = one[Long]("c b a", TextOps.rollingHash)
-    val h3 = one[Long]("a b c", TextOps.rollingHash)
-    assert(h1 == h3 && h1 != h2)
-  }
-
   test("qualityScore bands") {
     val good = "the quick brown fox jumps over the lazy dog and then keeps running today."
     assert(one[Double](good, TextOps.qualityScore) == 1.0)

@@ -50,12 +50,10 @@ class UrlSpec extends SparkSpec {
     // group — distinct unparseable spellings must all survive
     val df = Seq((1L, "junk one"), (2L, "junk two"), (3L, "junk one"),
       (4L, "https://a.com/p")).toDF("doc_id", "url")
-    val kept = Url.keepFirstByUrl(df, "url", "doc_id")
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(1L, 2L, 4L),
+    val kept = Url.dedupByCanonical(df, "url", "doc_id")
+      .select("keep_id").as[Long].collect().toSeq
+    assert(kept.sorted == Seq(1L, 2L, 4L),
       "unparseable rows dedup by raw spelling only")
-    val report = Url.dedupByCanonical(df, "url", "doc_id")
-    assert(report.count() == 3)
   }
 
   test("fallback keyspace is disjoint from the canonical keyspace") {
@@ -65,9 +63,9 @@ class UrlSpec extends SparkSpec {
     // unparseable row into the parseable group and drop it
     val df = Seq((1L, "https://a.com/p"), (2L, "a.com/p"))
       .toDF("doc_id", "url")
-    val kept = Url.keepFirstByUrl(df, "url", "doc_id")
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(1L, 2L),
+    val kept = Url.dedupByCanonical(df, "url", "doc_id")
+      .select("keep_id").as[Long].collect().toSeq
+    assert(kept.sorted == Seq(1L, 2L),
       "an unparseable row must never merge into a canonical group")
     val keys = df.select(Url.dedupKey(col("url")).as("k"))
       .as[String].collect().toSeq
@@ -87,15 +85,17 @@ class UrlSpec extends SparkSpec {
     assert(out == Seq(("a.com/p", 1L, 3L, 2L), ("b.com/q", 4L, 1L, 1L)))
   }
 
-  test("keepFirstByUrl keeps the min-id row intact per canonical key") {
-    val df = Seq(
-      (5L, "http://www.A.com/p/", "later"),
-      (2L, "https://a.com/p", "first"),
-      (9L, "https://b.com/q", "only")
-    ).toDF("doc_id", "url", "payload")
-    val kept = Url.keepFirstByUrl(df, "url", "doc_id")
-      .orderBy("doc_id").as[(Long, String, String)].collect().toSeq
-    assert(kept == Seq((2L, "https://a.com/p", "first"),
-      (9L, "https://b.com/q", "only")))
+  test("dedupByCanonical keeper is the min id whatever the input order") {
+    val rows = Seq(
+      (5L, "http://www.A.com/p/"),
+      (2L, "https://a.com/p"),
+      (9L, "https://b.com/q"))
+    for (order <- Seq(rows, rows.reverse)) {
+      val keep = Url.dedupByCanonical(order.toDF("doc_id", "url").repartition(3),
+          "url", "doc_id")
+        .select("canon_url", "keep_id").orderBy("canon_url")
+        .as[(String, Long)].collect().toSeq
+      assert(keep == Seq(("a.com/p", 2L), ("b.com/q", 9L)))
+    }
   }
 }

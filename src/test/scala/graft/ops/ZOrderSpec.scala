@@ -204,7 +204,7 @@ class ZOrderSpec extends SparkSpec {
       .groupBy("b").count().orderBy(desc("count")).head()
     // linear: nearly everything lands in bucket 0
     assert(linear.getLong(0) == 0L && linear.getLong(1) > 15000L)
-    val qb = df.select(ZOrder.bucketizeByQuantiles(df, "v", 6).as("b"))
+    val qb = df.select(ZOrder.bucketizeByQuantilesMulti(df, Seq("v"), 6).head.as("b"))
       .groupBy("b").count()
     val counts = qb.select("count").as[Long].collect()
     // quantile: ~64 near-uniform buckets (each ≈ 312 rows; allow 4×)

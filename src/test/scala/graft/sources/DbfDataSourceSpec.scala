@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.testutil.FileBuilders
+import graft.testutil.{Adm2Fixture, FileBuilders}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions.col
 
@@ -30,5 +30,15 @@ class DbfDataSourceSpec extends SparkSpec {
     val df = spark.read.format("dbf").load(real)
     assert(df.count() == 928)
     assert(df.where(col("ADM1_EN") === "Chiang Mai").count() == 25)
+  }
+
+  test("reads a generated ADM2 table through the scan path") {
+    val p = Adm2Fixture.write()
+    try {
+      val df = spark.read.format("dbf").load(p)
+      assert(df.count() == Adm2Fixture.Provinces.map(_._3.size).sum)
+      assert(df.where(col("ADM1_EN") === "Chiang Mai").count() ==
+        Adm2Fixture.ChiangMaiDistricts)
+    } finally Files.delete(Paths.get(p))
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.testutil.Adm2Fixture
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
@@ -63,5 +64,17 @@ class DbfReaderSpec extends SparkSpec {
     val df = DbfReader.read(spark, p) // TIS-620 default
     assert(df.count() == 928)
     assert(df.columns.exists(_.toUpperCase.contains("ADM1")))
+  }
+
+  test("reads a generated ADM2 attribute table in the default TIS-620") {
+    val p = Adm2Fixture.write()
+    try {
+      val df = DbfReader.read(spark, p) // TIS-620 default
+      assert(df.count() == Adm2Fixture.Provinces.map(_._3.size).sum)
+      assert(df.columns.toSeq == Seq("ADM1_EN", "ADM1_TH", "ADM2_EN", "ADM2_TH"))
+      val th = df.where(df("ADM1_EN") === "Chiang Mai")
+        .select("ADM1_TH").distinct().collect().map(_.getString(0)).toSeq
+      assert(th == Seq("เชียงใหม่"))
+    } finally Files.delete(Paths.get(p))
   }
 }

@@ -5,7 +5,9 @@
 # specs, 103 oracle gates, the bench — went red at once).
 #
 # Usage:
-#   tools/precommit.sh           # compile main + test sources (~30 s warm)
+#   tools/precommit.sh           # compile main + test sources and the
+#                                # benchmark (~30 s warm, + ~2 min when
+#                                # src/main changed since the last build)
 #   FULL=1 tools/precommit.sh    # also run the sf0.001 smoke gate
 #
 # Run it before EVERY commit that touches src/. If it fails, fix or
@@ -30,6 +32,18 @@ sbt -batch compile Test/compile > /tmp/precommit_compile.log 2>&1 || {
   exit 1
 }
 echo "[precommit] compile green."
+
+# the benchmark compiles src/main together with enginebench/src through
+# its own build (enginebench/run.py); a src/main API change it depends
+# on must fail here, not in every benchmark run
+echo "[precommit] compiling the benchmark against src/main..."
+python3 -B -c 'import sys; sys.path.insert(0, "enginebench"); import run; run.build()' \
+    > /tmp/precommit_bench.log 2>&1 || {
+  echo "[precommit] FAIL — benchmark build broken; tail of log:"
+  tail -20 /tmp/precommit_bench.log
+  exit 1
+}
+echo "[precommit] benchmark build green."
 
 if [[ "${FULL:-0}" == "1" ]]; then
   echo "[precommit] running sf0.001 smoke (Verify)..."
